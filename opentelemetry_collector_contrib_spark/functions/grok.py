@@ -357,7 +357,10 @@ def grok_extract(
                         order.append(o)
                 return struct_cols_to_map([merged[o] for o in order], order, valid)
 
-            return _extract_arrow(col)
+            # a deterministic UDF "may even be invoked more times than it is
+            # present in the query" (pyspark udf docs): a filter on the parsed
+            # map is pushed below this projection and re-runs the parse
+            return _extract_arrow.asNondeterministic()(col)
 
     compiled_src = rx
     names_src = names
@@ -389,4 +392,5 @@ def grok_extract(
 
         return s.map(one)
 
-    return _extract(col)
+    # once per row, like the arrow engine above
+    return _extract.asNondeterministic()(col)

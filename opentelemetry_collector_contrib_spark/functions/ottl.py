@@ -159,7 +159,11 @@ def parse_csv_(col: Column, header: list[str], delimiter: str = ",") -> Column:
     if len(delimiter) == 1 and delimiter != '"':
         fld = f'"(?:[^"]|"")*"|[^"{d}]*'
         valid = col.rlike(f"^(?:{fld})(?:{d}(?:{fld}))*$")
-        toks = F.regexp_extract_all(col, F.lit(f"(?:^|{d})({fld})"), 1)
+        # tokenize a delimiter-prefixed copy: every match then starts with
+        # the delimiter and has width >= 1. Matching `^` on the raw line
+        # lets an empty first field match with zero width, and the scan
+        # then steps past the delimiter after it (',x,"y"' loses 'x').
+        toks = F.regexp_extract_all(F.concat(F.lit(delimiter), col), F.lit(f"{d}({fld})"), 1)
         unq = F.transform(
             toks,
             lambda t: F.when(

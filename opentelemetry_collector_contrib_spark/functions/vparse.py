@@ -676,5 +676,14 @@ def parse_multiformat(body: pd.Series, fmt: pd.Series) -> pd.Series:
     return out
 
 
+# Each parse UDF runs once per row: a deterministic UDF "may even be invoked
+# more times than it is present in the query" (pyspark udf docs), which is
+# what happens when a filter on the parsed map is pushed below the parse.
+parse_multiformat = parse_multiformat.asNondeterministic()
+json_map_strict = json_map_strict.asNondeterministic()
+if parse_multiformat_arrow is not None:
+    parse_multiformat_arrow = parse_multiformat_arrow.asNondeterministic()
+
+
 def parse_multiformat_col(body: Column, fmt: Column) -> Column:
     return parse_multiformat(body, fmt)

@@ -742,7 +742,9 @@ def windows_event_parser(
         return s.map(lambda x: None if x is None else parse_one(x))
 
     src = get_field(df, parse_from)
-    out = set_parsed(df, _parse(src), parse_to, on_error)
+    # nondeterministic: an on_error filter is not pushed below the parse,
+    # so the UDF runs once per row (see functions/grok.py)
+    out = set_parsed(df, _parse.asNondeterministic()(src), parse_to, on_error)
     level_name = F.element_at(F.col(parse_to), "level")
     sev = (
         F.when(level_name.isin("Critical", "1"), 21)

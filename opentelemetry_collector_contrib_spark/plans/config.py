@@ -317,8 +317,11 @@ def compile_collector_config(config: dict | str):
     `operators` chain) / otlpjsonfile / table; all processors of
     `_collector_processor_stage`; exporters file/clickhouse (parquet or
     json dirs under out_base) and nop; `service.pipelines.logs*` wiring
-    with multi-exporter fan-out written in ONE job per pipeline
-    (fanout.write_fanout_with_counts shape, not one scan per exporter)."""
+    with multi-exporter fan-out written in one job per exporter FORMAT
+    (fanout.write_fanout_with_counts shape: exporters sharing a format
+    share a job). When a pipeline's exporters span several formats, the
+    processed frame is persisted for the duration of its write jobs, so
+    receivers and processors run once per pipeline, not once per job."""
     if isinstance(config, str):
         import yaml
 
@@ -387,20 +390,31 @@ def compile_collector_config(config: dict | str):
                     for e in real
                 }
                 # one write per distinct format (partitionBy can't mix formats)
+                fmts = sorted(set(fmt_of.values()))
+                # several write jobs: persist the processed frame so they
+                # share one receiver -> processors pass (persist, write,
+                # write, unpersist — the foreachBatch multi-sink idiom)
+                cached = len(fmts) > 1
+                if cached:
+                    df.persist()
                 counts: dict[str, int] = {}
-                for fmt in sorted(set(fmt_of.values())):
-                    sel = [e for e in real if fmt_of[e] == fmt]
-                    part = tagged.filter(F.col("__exporter").isin(sel))
-                    got = write_fanout_with_counts(
-                        part, f"{out_base}/{pname}", route_names=sel,
-                        route_col="__exporter", fmt=fmt,
-                    )
-                    # 'default' is write_fanout's routing catch-all, not
-                    # an exporter of this pipeline — a phantom zero entry
-                    # would corrupt per-exporter accounting consumers
-                    if "default" not in sel:
-                        got.pop("default", None)
-                    counts.update(got)
+                try:
+                    for fmt in fmts:
+                        sel = [e for e in real if fmt_of[e] == fmt]
+                        part = tagged.filter(F.col("__exporter").isin(sel))
+                        got = write_fanout_with_counts(
+                            part, f"{out_base}/{pname}", route_names=sel,
+                            route_col="__exporter", fmt=fmt,
+                        )
+                        # 'default' is write_fanout's routing catch-all, not
+                        # an exporter of this pipeline — a phantom zero entry
+                        # would corrupt per-exporter accounting consumers
+                        if "default" not in sel:
+                            got.pop("default", None)
+                        counts.update(got)
+                finally:
+                    if cached:
+                        df.unpersist()
                 results[pname] = counts
             return results
 

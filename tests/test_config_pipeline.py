@@ -124,22 +124,17 @@ operators:
     assert r["metric"] == "system.memory" and r["value"] == 200.0
 
 
-def test_full_collector_config_end_to_end(spark, tmp_path):
-    """receivers -> processors -> exporters -> service.pipelines: the
-    reference's actual YAML layout compiled and run as one Spark job per
-    pipeline, multi-exporter fan-out + obsreport counts."""
-    import os
-
-    from opentelemetry_collector_contrib_spark.plans.config import compile_collector_config
-
+def _collector_config(tmp_path, exporters: dict[str, str]) -> str:
+    """filelog (regex + severity parsers) -> filter -> transform over 100
+    generated lines, fanned out to `exporters` ({name: format}) and nop."""
     logdir = tmp_path / "logs"
     logdir.mkdir()
     with open(logdir / "app.log", "w") as f:
         for i in range(100):
             lvl = "ERROR" if i % 10 == 0 else "INFO"
             f.write(f"{lvl} code={i} msg=event-{i}\n")
-
-    cfg = f"""
+    exp_cfg = "".join(f"  {e}:\n    format: {fmt}\n" for e, fmt in exporters.items())
+    return f"""
 receivers:
   filelog:
     include: [{logdir}/*.log]
@@ -158,17 +153,24 @@ processors:
       - statements:
           - 'set(attributes["env"], "prod")'
 exporters:
-  clickhouse:
-    format: parquet
-  file/backup:
-    format: json
-service:
+{exp_cfg}service:
   pipelines:
     logs:
       receivers: [filelog]
       processors: [filter/drop_debug, transform/tag]
-      exporters: [clickhouse, file/backup, nop]
+      exporters: [{", ".join(exporters)}, nop]
 """
+
+
+def test_full_collector_config_end_to_end(spark, tmp_path):
+    """receivers -> processors -> exporters -> service.pipelines: the
+    reference's actual YAML layout compiled and run, multi-exporter
+    fan-out + obsreport counts."""
+    import os
+
+    from opentelemetry_collector_contrib_spark.plans.config import compile_collector_config
+
+    cfg = _collector_config(tmp_path, {"clickhouse": "parquet", "file/backup": "json"})
     plan = compile_collector_config(cfg)
     out = str(tmp_path / "out")
     counts = plan.run(spark, out)
@@ -185,6 +187,77 @@ service:
     row = back.filter(F.element_at("attributes", "code") == "10").first()
     assert row["attributes"]["env"] == "prod"
     assert row["severity_number"] == 17  # ERROR line
+    # the json exporter holds the same rows
+    as_json = spark.read.json(f"{out}/logs/__exporter=file%2Fbackup")
+    sums = [
+        d.agg(F.count(F.lit(1)), F.sum(F.crc32("body"))).first()
+        for d in (back, as_json)
+    ]
+    assert sums[0] == sums[1]
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _spy_writes(monkeypatch, spark, fail_on_call: int | None = None) -> list[bool]:
+    """Wrap the per-format write: returns a list that records, per write
+    job, whether a cached frame existed when it started. The call
+    numbered `fail_on_call` (1-based) raises instead of writing."""
+    from opentelemetry_collector_contrib_spark.sinks import fanout
+
+    real = fanout.write_fanout_with_counts
+    cached: list[bool] = []
+
+    def spy(*args, **kwargs):
+        cached.append(not _cache_is_empty(spark))
+        if len(cached) == fail_on_call:
+            raise RuntimeError("injected write failure")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(fanout, "write_fanout_with_counts", spy)
+    # other tests' frames may still be cached in the shared session
+    spark.catalog.clearCache()
+    return cached
+
+
+def test_multi_format_exporters_share_a_released_cache(spark, tmp_path, monkeypatch):
+    """Exporters in two formats: both write jobs read one persisted
+    upstream, and run() leaves nothing cached."""
+    from opentelemetry_collector_contrib_spark.plans.config import compile_collector_config
+
+    cached = _spy_writes(monkeypatch, spark)
+    cfg = _collector_config(tmp_path, {"clickhouse": "parquet", "file/backup": "json"})
+    counts = compile_collector_config(cfg).run(spark, str(tmp_path / "out"))
+    assert counts["logs"] == {"clickhouse": 90, "file/backup": 90}
+    assert cached == [True, True]
+    assert _cache_is_empty(spark)
+
+
+def test_cache_released_when_a_write_fails(spark, tmp_path, monkeypatch):
+    import pytest
+
+    from opentelemetry_collector_contrib_spark.plans.config import compile_collector_config
+
+    cached = _spy_writes(monkeypatch, spark, fail_on_call=2)
+    cfg = _collector_config(tmp_path, {"clickhouse": "parquet", "file/backup": "json"})
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        compile_collector_config(cfg).run(spark, str(tmp_path / "out"))
+    assert cached == [True, True]
+    assert _cache_is_empty(spark)
+
+
+def test_single_format_pipeline_never_persists(spark, tmp_path, monkeypatch):
+    """Two exporters in one format share one write job, so there is no
+    second job to share an upstream with: nothing is persisted."""
+    from opentelemetry_collector_contrib_spark.plans.config import compile_collector_config
+
+    cached = _spy_writes(monkeypatch, spark)
+    cfg = _collector_config(tmp_path, {"clickhouse": "parquet", "file/archive": "parquet"})
+    counts = compile_collector_config(cfg).run(spark, str(tmp_path / "out"))
+    assert counts["logs"] == {"clickhouse": 90, "file/archive": 90}
+    assert cached == [False]
+    assert _cache_is_empty(spark)
 
 
 def test_round3_operator_types_compile(spark):

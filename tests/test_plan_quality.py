@@ -5,6 +5,7 @@ that decide 100TB behavior — asserted, not eyeballed."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.operators import connectors, processors
@@ -200,3 +201,49 @@ def test_registry_wide_no_unpartitioned_window_over_corpus(spark):
             ):
                 offenders.append((name, subtree.splitlines()[:4]))
     assert not offenders, offenders
+
+
+_APACHE = '127.0.0.1 - - [10/Oct/2000:13:55:36 -0700] "GET /a.gif HTTP/1.0" {} 23'
+
+
+def _grok_arrow(df):
+    from opentelemetry_collector_contrib_spark.operators import parsers
+
+    return parsers.grok_parser(df, "%{COMMONAPACHELOG}"), "http_response_status_code", "_extract_arrow("
+
+
+def _grok_pandas(df):
+    from opentelemetry_collector_contrib_spark.operators import parsers
+
+    # RE2 rejects the lookahead, so grok falls back to its pandas engine
+    pat = r'"(?:%{WORD:method}) (?=/)%{NOTSPACE:path}[^"]*" %{INT:status}'
+    return parsers.grok_parser(df, pat), "status", "_extract("
+
+
+def _vparse(impl):
+    def parse(df):
+        from opentelemetry_collector_contrib_spark.plans.pipeline import parse_records
+
+        return parse_records(df, impl=impl), "status", "parse_multiformat_arrow("
+
+    return parse
+
+
+@pytest.mark.parametrize(
+    "parse",
+    [_grok_arrow, _grok_pandas, _vparse("arrow"), _vparse("hybrid")],
+    ids=["grok-arrow", "grok-pandas", "vparse-arrow", "vparse-hybrid"],
+)
+def test_parse_udf_runs_once_under_a_filter(spark, parse):
+    """A filter on a parsed key must not re-run the parse: Catalyst pushes
+    a filter below a projection of deterministic expressions, and an
+    inlined deterministic UDF runs a second time inside the filter."""
+    df = spark.createDataFrame(
+        [(_APACHE.format(s),) for s in (200, 404, 500)] + [("junk",)], "body string"
+    )
+    parsed, key, udf_name = parse(df)
+    kept = processors.filter_processor(parsed, [F.element_at("attributes", key) == "404"])
+    plan = _plan(kept)
+    assert udf_name in plan
+    assert plan.count("EvalPython") == 1, plan
+    assert kept.count() == 3  # the 404 line dropped, the unparsed line kept

@@ -1351,6 +1351,10 @@ def test_csv_parser_quoted_fields_go_semantics(spark):
         ('"unterminated,b,c', None),
         ('"",2,3', {"f1": "", "f2": "2", "f3": "3"}),
         ("x,y", {"f1": "x", "f2": "y", "f3": None}),  # short row pads
+        # quoted lines whose first field is empty (a zero-width match at
+        # the start used to swallow the next field)
+        (',"a"', {"f1": "", "f2": "a", "f3": None}),
+        (',x,"y"', {"f1": "", "f2": "x", "f3": "y"}),
     ]
     df = spark.createDataFrame([(b,) for b, _ in rows], "body string")
     out = {r["body"]: r["attributes"] for r in parsers.csv_parser(df, ["f1", "f2", "f3"]).collect()}
