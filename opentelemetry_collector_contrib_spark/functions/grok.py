@@ -7,28 +7,24 @@ definitions) once at plan time, then extracts named captures per record.
 
 Here: grok -> plain regex expansion happens on the driver at plan time;
 extraction is either
+- ``impl='arrow'`` (default): one RE2 ``pc.extract_regex`` C++ pass +
+  columnar map assembly (zero per-row Python) — the same engine family
+  go-grok itself runs on, so it is simultaneously the fastest impl and the
+  closest to the reference's matching semantics. Falls back to ``jvm`` at
+  plan time if RE2 rejects the expanded pattern (e.g. a user-supplied
+  lookaround or backreference), or
 - ``impl='jvm'``: one ``regexp_extract`` per named group (whole-stage
-  codegen, zero Python),
-- ``impl='pandas'``: a single Arrow-batched pandas UDF with the compiled
-  regex returning map<string,string> (one pass per row; preferred when the
-  pattern has many groups), or
-- ``impl='arrow'``: one RE2 ``pc.extract_regex`` C++ pass + columnar map
-  assembly (zero per-row Python) — the same engine family go-grok itself
-  runs on, so it is simultaneously the fastest impl and the closest to
-  the reference's matching semantics. Falls back to ``pandas`` at plan
-  time if RE2 rejects the expanded pattern (e.g. a user-supplied inline
-  group using python-only syntax).
+  codegen, zero Python) under Java regex, which takes those constructs.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 # Core default patterns (subset of the go-grok/logstash default set with the
 # same names & semantics).
@@ -271,8 +267,13 @@ def grok_extract(
     matched rows -> map of non-empty captures. Typed captures
     (%{X:key:int}) stay strings in the flat map model — callers cast (the
     reference PutInt/PutFloat at this point)."""
-    from .rxutil import strip_named_groups
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
+    from .rxutil import strip_named_groups, uncapture_unnamed_groups
+
+    if impl not in ("arrow", "jvm"):
+        raise ValueError(f"grok impl must be 'arrow' or 'jvm', got {impl!r}")
     ex = _Expander(custom, named_captures_only)
     rx = ex.expand(pattern)
     names = list(ex.names)
@@ -283,6 +284,16 @@ def grok_extract(
         if re.fullmatch(r"grok\d+", gname) and int(gname[4:]) < len(names):
             return names[int(gname[4:])]
         return gname
+
+    if impl == "arrow":
+        # extract_regex rejects unnamed capturing groups (%{URIPROTO}'s
+        # `([A-Za-z0-9+\-.]+)+`); the map keeps only named ones anyway
+        arrow_rx = uncapture_unnamed_groups(rx)
+        try:
+            # plan-time RE2 validation (extract_regex compiles eagerly)
+            pc.extract_regex(pa.array([], type=pa.string()), pattern=arrow_rx)
+        except pa.ArrowInvalid:
+            impl = "jvm"  # RE2 rejects it (lookaround, backreference)
 
     if impl == "jvm":
         jvm_rx, idx_names = strip_named_groups(rx)
@@ -306,91 +317,35 @@ def grok_extract(
             F.lit(None).cast("map<string,string>")
         )
 
-    if impl == "arrow":
-        import pyarrow as pa
+    @arrow_udf(T.MapType(T.StringType(), T.StringType()))
+    def _extract_arrow(s):
+        import pyarrow as _pa
+        import pyarrow.compute as _pc
 
-        try:
-            import pyarrow.compute as pc
-            from pyspark.sql.functions import arrow_udf
+        from .vparse import struct_cols_to_map
 
-            # plan-time RE2 validation (extract_regex compiles eagerly):
-            # a pattern RE2 rejects (python-only inline syntax) falls
-            # back to the pandas engine instead of failing per-task
-            pc.extract_regex(pa.array([], type=pa.string()), pattern=rx)
-        except Exception:
-            impl = "pandas"
-        else:
-            arrow_rx = rx
-            arrow_names = list(names)
+        if isinstance(s, _pa.ChunkedArray):
+            s = s.combine_chunks()
+        if len(s) == 0:
+            return _pa.array([], type=_pa.map_(_pa.string(), _pa.string()))
+        hits = _pc.extract_regex(s, pattern=arrow_rx)
+        valid = _pc.is_valid(hits).to_numpy(zero_copy_only=False)
+        # translate grokN sentinels to original keys; duplicate originals
+        # merge FIRST-non-empty (go-grok posture), in group order — all
+        # columnar, zero per-row Python
+        merged: dict[str, object] = {}
+        for i, f in enumerate(hits.type):
+            o = orig_of(f.name)
+            c = hits.field(i)
+            if o in merged:
+                prev = merged[o]
+                prev_ok = _pc.fill_null(_pc.not_equal(prev, ""), False)
+                merged[o] = _pc.if_else(prev_ok, prev, c)
+            else:
+                merged[o] = c
+        return struct_cols_to_map(list(merged.values()), list(merged), valid)
 
-            @arrow_udf(T.MapType(T.StringType(), T.StringType()))
-            def _extract_arrow(s):
-                import pyarrow as _pa
-                import pyarrow.compute as _pc
-
-                from .vparse import struct_cols_to_map
-
-                if isinstance(s, _pa.ChunkedArray):
-                    s = s.combine_chunks()
-                if len(s) == 0:
-                    return _pa.array([], type=_pa.map_(_pa.string(), _pa.string()))
-                hits = _pc.extract_regex(s, pattern=arrow_rx)
-                gnames = [f.name for f in hits.type]
-                valid = _pc.is_valid(hits).to_numpy(zero_copy_only=False)
-                # translate grokN sentinels to original keys; duplicate
-                # originals merge FIRST-non-empty (go-grok posture), in
-                # group order — all columnar, zero per-row Python
-                merged: dict[str, object] = {}
-                order: list[str] = []
-                for i, g in enumerate(gnames):
-                    if re.fullmatch(r"grok\d+", g) and int(g[4:]) < len(arrow_names):
-                        o = arrow_names[int(g[4:])]
-                    else:
-                        o = g
-                    c = hits.field(i)
-                    if o in merged:
-                        prev = merged[o]
-                        prev_ok = _pc.fill_null(_pc.not_equal(prev, ""), False)
-                        merged[o] = _pc.if_else(prev_ok, prev, c)
-                    else:
-                        merged[o] = c
-                        order.append(o)
-                return struct_cols_to_map([merged[o] for o in order], order, valid)
-
-            # a deterministic UDF "may even be invoked more times than it is
-            # present in the query" (pyspark udf docs): a filter on the parsed
-            # map is pushed below this projection and re-runs the parse
-            return _extract_arrow.asNondeterministic()(col)
-
-    compiled_src = rx
-    names_src = names
-
-    @pandas_udf(T.MapType(T.StringType(), T.StringType()))
-    def _extract(s: pd.Series) -> pd.Series:
-        # re.ASCII: Java regex (the jvm impl) and go-grok's RE2 (the
-        # reference) both treat \w/\d/\s/\b as ASCII; python's unicode
-        # default would let %{WORD} match 'é' only in this impl
-        crx = re.compile(compiled_src, re.ASCII)
-
-        def one(v):
-            if v is None:
-                return None
-            m = crx.search(v)
-            if not m:
-                return None  # NULL like the jvm path (on_error contract)
-            out: dict[str, str] = {}
-            for gname, val in m.groupdict().items():
-                if not val:  # drop None AND '' (jvm can't distinguish)
-                    continue
-                if re.fullmatch(r"grok\d+", gname) and int(gname[4:]) < len(names_src):
-                    orig = names_src[int(gname[4:])]
-                else:
-                    orig = gname
-                if orig not in out:
-                    out[orig] = val
-            return out
-
-        return s.map(one)
-
-    # once per row, like the arrow engine above
-    return _extract.asNondeterministic()(col)
+    # a deterministic UDF "may even be invoked more times than it is present
+    # in the query" (pyspark udf docs): a filter on the parsed map is pushed
+    # below this projection and re-runs the parse
+    return _extract_arrow.asNondeterministic()(col)

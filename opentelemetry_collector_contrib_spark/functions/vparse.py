@@ -1,14 +1,15 @@
-"""Vectorized multi-format payload parsing as an Arrow-batched pandas UDF.
+"""Vectorized multi-format payload parsing as a pyarrow-native UDF.
 
 The north rule mandates the parse step as vectorized pandas/Arrow UDFs
-over the payload column (BASELINE.json input_hint). This is also the
-faster path at high parallelism: Python workers are separate PROCESSES,
-so the parse scales past the single-JVM contention ceiling that caps the
-equivalent from_json/regexp_extract expression chain (~2x throughput at
-32 cores in this sandbox; see BASELINE.md bench notes).
+over the payload column (BASELINE.json input_hint). Python workers are
+separate PROCESSES, so the parse scales past the single-JVM contention
+ceiling that caps the equivalent from_json/regexp_extract expression chain
+(~2x throughput at 32 cores; see BASELINE.md bench notes).
 
 Regexes compile once per worker process (module import), batches arrive
-as Arrow arrays — never per-row Python UDFs.
+as Arrow arrays — never per-row Python UDFs. The per-row functions
+(_parse_one, _json_one, _kv_one) are the reference model the tests hold
+the Arrow batch path and the JVM expressions to.
 """
 
 from __future__ import annotations
@@ -16,10 +17,8 @@ from __future__ import annotations
 import json as _json
 import re
 
-import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 # the four payload shapes of the synthetic corpus (FIXTURES.md §2):
 # fmt 0 apache common-log, 1 JSON, 2 key=value, 3 containerd.
@@ -96,8 +95,8 @@ _APACHE_DETECT_RX = _py_rx(APACHE_DETECT_PAT)
 
 
 def _parse_one(body: str | None, fmt: int | None) -> dict | None:
-    """Per-row reference model of the parse contract (tests compare both
-    vectorized impls against this). MALFORMED rows yield NULL, exactly
+    """Per-row reference model of the parse contract (tests compare the
+    Arrow and JVM impls against this). MALFORMED rows yield NULL, exactly
     like the JVM expressions (from_json / extract_patterns), because the
     parser on_error semantics key off NULL-vs-present:
       - invalid or non-object JSON -> None (from_json map returns NULL)
@@ -108,11 +107,6 @@ def _parse_one(body: str | None, fmt: int | None) -> dict | None:
     fmt NULL auto-detects; unknown numeric tags parse as containerd."""
     if body is None:
         return None
-    # Arrow delivers a null int series as float64 NaN — normalize so the
-    # auto-detect branches (`fmt is None`) actually fire for tables
-    # without a fmt column instead of falling through to CONTAINERD_RX
-    if fmt is not None and pd.isna(fmt):
-        fmt = None
     if fmt == 1 or (fmt is None and body.startswith("{")):
         return _json_one(body)
     if fmt == 2 or (fmt is None and _KV_DETECT_RX.match(body)):
@@ -171,72 +165,7 @@ def _kv_one(b: str) -> dict:
     return out
 
 
-def _extract_records(sub: pd.Series, rx) -> pd.Series:
-    """Vectorized named-group extraction. Preferred path: ONE
-    pyarrow.compute.extract_regex call — RE2 in C++ over the whole Arrow
-    batch slice (~3.5x faster than pandas str.extract, which loops Python
-    `re` per row) — then COLUMNAR dict assembly from the struct's child
-    arrays (whole-struct to_pylist materializes 9-key dicts slower than
-    the regex itself; ~25% total win measured at 1M rows). Falls back to
-    str.extract if the pattern exceeds RE2 (none of ours do: no
-    backrefs/lookarounds). Non-matching rows become {} (parser on_error
-    semantics apply downstream on empty maps)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    pattern = rx.pattern if hasattr(rx, "pattern") else rx
-    try:
-        hits = pc.extract_regex(pa.array(sub, type=pa.string()), pattern=pattern)
-    except pa.ArrowInvalid:  # RE2-unsupported construct: pandas fallback
-        recs = sub.str.extract(pattern).to_dict("records")
-        return pd.Series(
-            [
-                {k: v for k, v in r.items() if isinstance(v, str) and v != ""}
-                if any(isinstance(v, str) for v in r.values())
-                else None
-                for r in recs
-            ],
-            index=sub.index,
-            dtype=object,
-        )
-    names = [f.name for f in hits.type]
-    fields = [hits.field(i) for i in range(len(names))]
-    cols = [f.to_pylist() for f in fields]
-    struct_nulls = hits.null_count
-    # optional groups would surface as per-field nulls on MATCHED rows;
-    # drop them like the JVM path does (our patterns have none, so this
-    # branch normally stays cold). Non-matching rows are None (NULL map),
-    # and empty-string group matches are dropped — both mirror
-    # ottl.extract_patterns, whose NULL drives parser on_error semantics.
-    # The empty-value probe runs in Arrow C++ (one vectorized equality per
-    # column), not a Python '' in list scan over the whole batch.
-    field_nulls = any(f.null_count > struct_nulls for f in fields)
-    drop_empty = field_nulls or any(
-        bool(pc.any(pc.equal(f, "")).as_py()) for f in fields
-    )
-    if struct_nulls:
-        valid = pc.is_valid(hits).to_pylist()
-        if drop_empty:
-            rows = [
-                {k: v for k, v in zip(names, vals) if v} if ok else None
-                for ok, vals in zip(valid, zip(*cols))
-            ]
-        else:
-            rows = [
-                dict(zip(names, vals)) if ok else None
-                for ok, vals in zip(valid, zip(*cols))
-            ]
-    elif drop_empty:
-        rows = [
-            {k: v for k, v in zip(names, vals) if v}
-            for vals in zip(*cols)
-        ]
-    else:
-        rows = [dict(zip(names, vals)) for vals in zip(*cols)]
-    return pd.Series(rows, index=sub.index, dtype=object)
-
-
-def _extract_map_arrow(sub: "pa.Array", rx) -> "pa.Array":
+def _extract_map_arrow(sub: "pa.Array", pattern: str) -> "pa.Array":
     """String subset -> MapArray in ONE RE2 pass + columnar assembly —
     zero per-row Python. extract_regex yields a StructArray; the map
     children are built by a vectorized transpose (concat fields + one
@@ -245,11 +174,8 @@ def _extract_map_arrow(sub: "pa.Array", rx) -> "pa.Array":
     offsets mark non-matching rows as NULL maps (parser on_error
     semantics downstream). The body bytes are touched exactly once (the
     regex); everything after operates on the extracted field buffers."""
-    import numpy as np
-    import pyarrow as pa
     import pyarrow.compute as pc
 
-    pattern = rx.pattern if hasattr(rx, "pattern") else rx
     hits = pc.extract_regex(sub, pattern=pattern)
     names = [f.name for f in hits.type]
     valid_np = pc.is_valid(hits).to_numpy(zero_copy_only=False)
@@ -602,88 +528,25 @@ def _parse_multiformat_arrow_batch(body: "pa.Array", fmt: "pa.Array") -> "pa.Arr
     return pc.take(merged, pa.array(inv, type=pa.int64()))
 
 
-try:  # pyspark >= 4.1: pyarrow-native UDF — the lowest-byte-churn path
-    from pyspark.sql.functions import arrow_udf
-
-    @arrow_udf(T.MapType(T.StringType(), T.StringType()))
-    def parse_multiformat_arrow(body, fmt):
-        return _parse_multiformat_arrow_batch(body, fmt)
-
-    @arrow_udf(T.MapType(T.StringType(), T.StringType()))
-    def json_map_strict(body):
-        # STRICT whole-value JSON -> map<string,string> (Go
-        # json.Unmarshal semantics: trailing garbage after a complete
-        # value is a parse FAILURE). Jackson's from_json silently
-        # accepts '{}x' as {} (prefix parse), so surfaces that need
-        # reference bit-parity (container docker lines,
-        # stanza/operator/parser/container) must use this instead.
-        # Callers mask non-JSON rows to NULL so only the JSON subset
-        # ships through Arrow; NULLs pass through untouched.
-        return _json_subset_arrow(body)
-
-except ImportError:  # pragma: no cover - older pyspark
-    parse_multiformat_arrow = None
-
-    @pandas_udf(T.MapType(T.StringType(), T.StringType()))
-    def json_map_strict(body: pd.Series) -> pd.Series:  # type: ignore[no-redef]
-        return body.map(lambda x: None if x is None else _json_one(x))
+@arrow_udf(T.MapType(T.StringType(), T.StringType()))
+def parse_multiformat_arrow(body, fmt):
+    return _parse_multiformat_arrow_batch(body, fmt)
 
 
-@pandas_udf(T.MapType(T.StringType(), T.StringType()))
-def parse_multiformat(body: pd.Series, fmt: pd.Series) -> pd.Series:
-    """body + fmt tag -> map<string,string> of extracted attributes.
-
-    Group-wise vectorized: rows are partitioned by format once per batch,
-    then each regex format runs as a single pandas str.extract (C regex
-    loop) instead of a per-row Python re.match. JSON/key=value rows keep
-    per-row parsing (inherently dict-shaped) but skip the format dispatch.
-    Non-string JSON values are stringified with compact json.dumps
-    (booleans -> 'true'/'false', nested objects -> JSON text), matching
-    the JVM from_json map<string,string> path."""
-    out = pd.Series([None] * len(body), index=body.index, dtype=object)
-    bn = body.notna()
-    fnum = pd.to_numeric(fmt, errors="coerce")
-    known = fnum.notna() & bn
-    is0 = known & (fnum == 0)
-    is1 = known & (fnum == 1)
-    is2 = known & (fnum == 2)
-    auto = bn & fnum.isna()
-    if auto.any():
-        b = body[auto]
-        j = b.str.startswith("{").fillna(False)
-        is1.loc[j[j].index] = True
-        rem = b[~j]
-        kv = rem.str.match(_KV_DETECT_RX).fillna(False)
-        is2.loc[kv[kv].index] = True
-        rem2 = rem[~kv]
-        # same cheap prefix the JVM auto branch uses; a near-miss apache
-        # line then yields NULL from the apache extract in BOTH impls
-        ap = rem2.str.match(_APACHE_DETECT_RX).fillna(False)
-        is0.loc[ap[ap].index] = True
-    # everything else (fmt==3, unknown tags, auto-fallthrough) -> containerd,
-    # matching _parse_one's dispatch
-    is3 = bn & ~is0 & ~is1 & ~is2
-    if is1.any():
-        sub = body[is1]
-        out.loc[is1] = pd.Series([_json_one(x) for x in sub], index=sub.index, dtype=object)
-    if is2.any():
-        sub = body[is2]
-        out.loc[is2] = pd.Series([_kv_one(x) for x in sub], index=sub.index, dtype=object)
-    if is0.any():
-        out.loc[is0] = _extract_records(body[is0], APACHE_PAT)
-    if is3.any():
-        out.loc[is3] = _extract_records(body[is3], CONTAINERD_PAT)
-    return out
+@arrow_udf(T.MapType(T.StringType(), T.StringType()))
+def json_map_strict(body):
+    # STRICT whole-value JSON -> map<string,string> (Go json.Unmarshal
+    # semantics: trailing garbage after a complete value is a parse
+    # FAILURE). Jackson's from_json silently accepts '{}x' as {} (prefix
+    # parse), so surfaces that need reference bit-parity (container docker
+    # lines, stanza/operator/parser/container) must use this instead.
+    # Callers mask non-JSON rows to NULL so only the JSON subset ships
+    # through Arrow; NULLs pass through untouched.
+    return _json_subset_arrow(body)
 
 
 # Each parse UDF runs once per row: a deterministic UDF "may even be invoked
 # more times than it is present in the query" (pyspark udf docs), which is
 # what happens when a filter on the parsed map is pushed below the parse.
-parse_multiformat = parse_multiformat.asNondeterministic()
+parse_multiformat_arrow = parse_multiformat_arrow.asNondeterministic()
 json_map_strict = json_map_strict.asNondeterministic()
-if parse_multiformat_arrow is not None:
-    parse_multiformat_arrow = parse_multiformat_arrow.asNondeterministic()
-
-
-def parse_multiformat_col(body: Column, fmt: Column) -> Column:
-    return parse_multiformat(body, fmt)

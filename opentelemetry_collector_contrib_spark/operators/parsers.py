@@ -3,8 +3,8 @@
 Each parser reads ``parse_from`` (default body), writes a
 map<string,string> into ``parse_to`` (default attributes), with the shared
 on_error semantics of /root/reference/pkg/stanza/operator/helper/parser.go.
-All are pure Column expressions (whole-stage codegen) except grok's pandas
-implementation.
+Most are pure Column expressions (whole-stage codegen); grok's default
+arrow engine and a few framing/decoding helpers are Arrow-batched UDFs.
 """
 
 from __future__ import annotations
@@ -321,7 +321,9 @@ def time_parser(
     pass it only for layouts without a zone directive, exactly the case
     where ParseInLocation's location takes effect. Validated at plan
     time like the reference's config load ('failed to load location');
-    an unvalidated name would ANSI-abort at runtime instead."""
+    an unvalidated name would ANSI-abort at runtime instead. An epoch
+    value is already an instant: the reference ignores `location` for
+    epoch layouts (still validating the name), and so does this."""
     src = get_field(df, parse_from)
     if layout_type == "epoch":
         ts = parse_epoch(src, layout)
@@ -334,7 +336,8 @@ def time_parser(
             zoneinfo.ZoneInfo(location)
         except Exception as e:
             raise ValueError(f"failed to load location {location}: {e}") from e
-        ts = F.to_utc_timestamp(ts, location)
+        if layout_type != "epoch":
+            ts = F.to_utc_timestamp(ts, location)
     return df.withColumn(out_col, ts)
 
 

@@ -13,8 +13,6 @@ the token arrays carried through untouched (per-row invariant).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,32 +37,42 @@ def _severity_from_attrs(df: DataFrame) -> DataFrame:
     return parsers.severity_parser(df.withColumn("__sev_text", text), "__sev_text").drop("__sev_text")
 
 
-def parse_records(logs: DataFrame, impl: str = "jvm") -> DataFrame:
+# The parse engine of parse_records and log_pipeline_fused. On a 4-core
+# host at local[2] the three engines ran within run-to-run spread of each
+# other (perfbench fused_tokens), so the default stays the engine the
+# flagship has always run there.
+DEFAULT_PARSE_IMPL = "hybrid"
+
+
+def parse_records(logs: DataFrame, impl: str = DEFAULT_PARSE_IMPL) -> DataFrame:
     """Vectorized parse of the 4 payload shapes (apache common-log / JSON /
     key=value / containerd) + severity + observed-timestamp fallback.
 
-    impl="arrow" (north-rule default): one pyarrow-native UDF (pyspark
-    4.1 arrow_udf) — format dispatch, RE2 extraction, and the output
-    MapArray assembly all in Arrow C++; only JSON/key=value rows touch
-    per-row Python. ~1.6x the pandas path at local[8] and the
-    lowest bytes/row through the Python workers (no pandas object
-    churn), which is what the 8->32 scaling pair is bound by.
-    impl="pandas": the Arrow-batched pandas UDF (pre-4.1 path).
+    impl="hybrid" (default): JSON and key=value rows parse in the JVM
+    (from_json / str_to_map), and the Python workers receive body bytes
+    only for the two regex formats, through the arrow UDF — fewer
+    bytes/row across the Python boundary than "arrow".
+    impl="arrow": one pyarrow-native UDF (arrow_udf) for all four formats
+    — format dispatch, RE2 extraction, and the output MapArray assembly
+    all in Arrow C++; only JSON/key=value rows touch per-row Python.
     impl="jvm": pure column expressions (from_json / str_to_map /
-    regexp_extract chain) inside whole-stage codegen — zero Python, best
-    for low parallelism / small batches. All produce identical maps."""
+    regexp_extract chain) inside whole-stage codegen — zero Python, the
+    reference the other two are held to. All produce identical maps."""
     from ..functions.ottl import extract_patterns
 
     # single source of truth for the format patterns — a drifted copy here
-    # would silently break the documented jvm/pandas parity
+    # would silently break the documented jvm/arrow parity
     from ..functions.vparse import (
         APACHE_DETECT_PAT,
         APACHE_PAT,
         CONTAINERD_PAT,
         KV_DETECT_PAT,
         java_pattern,
+        parse_multiformat_arrow,
     )
 
+    if impl not in ("hybrid", "arrow", "jvm"):
+        raise ValueError(f"parse impl must be 'hybrid', 'arrow' or 'jvm', got {impl!r}")
     body = F.col("body")
     # Java-regex variants of the canonical RE2-semantics patterns (`$`
     # rewritten to \z so a trailing-newline body is rejected exactly
@@ -72,23 +80,15 @@ def parse_records(logs: DataFrame, impl: str = "jvm") -> DataFrame:
     apache_rx = java_pattern(APACHE_PAT)
     containerd_rx = java_pattern(CONTAINERD_PAT)
     kv_detect_rx = java_pattern(KV_DETECT_PAT)
+    fmt = F.col("fmt") if "fmt" in logs.columns else F.lit(None).cast("int")
 
-    if impl in ("hybrid", "arrow"):
-        from ..functions.vparse import parse_multiformat_arrow as _pma
-
-        if _pma is None:
-            impl = "pandas"  # pyspark < 4.1 fallback
     if impl == "hybrid":
         # split the work by where each format parses cheapest: JSON and
         # key=value go to the JVM expressions (from_json/str_to_map —
         # Jackson + codegen, parity-tested against the Python models),
         # and the Python workers receive body BYTES only for the two
         # regex formats (the masked column ships as Arrow nulls for
-        # everything else). Halves the bytes/row through the Python
-        # workers — the resource the 8->32 scaling pair is bound by.
-        from ..functions.vparse import parse_multiformat_arrow
-
-        fmt = F.col("fmt") if "fmt" in logs.columns else F.lit(None).cast("int")
+        # everything else).
         # eqNullSafe, NOT ==: a NULL fmt makes `fmt == 1` NULL, the NULL
         # propagates through ~(is_json | is_kv), and when() then masks
         # EVERY auto-detect row to NULL — silently dropping the two
@@ -105,14 +105,8 @@ def parse_records(logs: DataFrame, impl: str = "jvm") -> DataFrame:
             .when(is_kv, F.str_to_map(F.trim(body), F.lit(" "), F.lit("=")))
             .otherwise(parse_multiformat_arrow(masked, fmt))
         )
-    elif impl in ("pandas", "arrow"):
-        from ..functions.vparse import parse_multiformat, parse_multiformat_arrow
-
-        fmt = F.col("fmt") if "fmt" in logs.columns else F.lit(None).cast("int")
-        if impl == "arrow" and parse_multiformat_arrow is None:
-            impl = "pandas"  # pyspark < 4.1 fallback
-        udf = parse_multiformat_arrow if impl == "arrow" else parse_multiformat
-        parsed = udf(body, fmt)
+    elif impl == "arrow":
+        parsed = parse_multiformat_arrow(body, fmt)
     else:
         # auto-detect (no fmt column, or a NULL fmt cell): same dispatch
         # order as vparse._parse_one
@@ -129,12 +123,11 @@ def parse_records(logs: DataFrame, impl: str = "jvm") -> DataFrame:
             .otherwise(extract_patterns(body, containerd_rx))
         )
         if "fmt" in logs.columns:
-            fmt = F.col("fmt")
             parsed = (
                 F.when(fmt == 1, F.from_json(body, "map<string,string>"))
                 .when(fmt == 2, F.str_to_map(F.trim(body), F.lit(" "), F.lit("=")))
                 .when(fmt == 0, extract_patterns(body, apache_rx))
-                # NULL fmt auto-detects (the pandas impl does; without
+                # NULL fmt auto-detects (the arrow impl does; without
                 # this branch NULL-fmt JSON rows would silently parse as
                 # containerd); unknown tags fall through to containerd
                 .when(fmt.isNull(), det)
@@ -190,29 +183,11 @@ def log_pipeline(
 DEFAULT_ROUTES = ["errors", "acme", "ecorp"]
 
 
-def resolve_parse_impl(spark: SparkSession) -> str:
-    """Cores-adaptive default for the fused pipeline's parse impl.
-
-    Measured (BASELINE.md r4): `hybrid` (JSON/kv via JVM from_json/
-    str_to_map, regex formats via the arrow UDF over a masked body —
-    halves bytes/row through the Python workers) wins at low parallelism
-    (495k vs 452k seq/s at 8 pinned cores) but loses at 32 (802k vs 892k:
-    the Jackson/codegen half contends inside the single executor JVM).
-    So: <= 8 task slots per executor -> hybrid, above -> arrow.
-    `SPARK_GRAFT_PARSE_IMPL` pins an impl explicitly (anything but
-    "auto"); the scaling harness pins `arrow` at both levels so the
-    N->4N efficiency pair compares one binary, not two."""
-    env = os.environ.get("SPARK_GRAFT_PARSE_IMPL", "auto")
-    if env and env != "auto":
-        return env
-    return "hybrid" if spark.sparkContext.defaultParallelism <= 8 else "arrow"
-
-
 def log_pipeline_fused(
     fused: DataFrame,
     meta: DataFrame,
     routes: list[tuple[str, F.Column]] | None = None,
-    parse_impl: str | None = None,
+    parse_impl: str = DEFAULT_PARSE_IMPL,
     keep_payload: bool = False,
 ) -> dict[str, DataFrame]:
     """North-rule pipeline over the FUSED input table
@@ -223,16 +198,14 @@ def log_pipeline_fused(
     Observation on the write job (sinks/fanout.write_fanout_with_counts),
     not a second scan.
 
-    parse_impl=None resolves adaptively (resolve_parse_impl). By default
+    parse_impl picks the parse_records engine. By default
     the serialized payload (`body`, `fmt`) is PRUNED right after the
     parse — the extracted attribute map subsumes it, and carrying ~100
     raw bytes/row through enrich -> route -> every per-sink write is pure
     memory-bandwidth burn at 10^12 rows (and 15-20%% of the post-parse
     row width here). keep_payload=True retains them for sinks that
     re-export the raw body (e.g. the glassflow formatter's Body column)."""
-    records = parse_records(
-        fused, impl=parse_impl or resolve_parse_impl(fused.sparkSession)
-    )
+    records = parse_records(fused, impl=parse_impl)
     if not keep_payload:
         records = records.drop("body", "fmt", "ingest_ts")
     enriched = lookup_enrich(records, meta, "source")

@@ -224,7 +224,6 @@ def q_grok_parser(spark, sf_dir):
     out = parsers.grok_parser(
         ev,
         "%{IP:client} %{WORD:method} %{NOTSPACE:path} %{INT:status}",
-        impl="pandas",
     )
     return out.select(
         "event_id",

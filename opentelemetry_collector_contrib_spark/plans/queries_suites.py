@@ -8,7 +8,7 @@ fits under the cap and EVERY operator gets a driver-verified row.
 
 Suite -> operators map (also in COVERAGE.md):
   parsers_structured   json_parser, csv_parser, key_value_parser, jsonarray_parser
-  parsers_web          regex_parser, grok_parser (pandas impl), uri_parser, container_parser
+  parsers_web          regex_parser, grok_parser (arrow impl), uri_parser, container_parser
   parsers_syslog_time  syslog rfc3164, rfc5424 (+structured data), time_parser x2,
                        trace_parser, severity_parser
   enrichment_suite     k8sattributes, geoip range join, resourcedetection
@@ -147,7 +147,7 @@ def q_parsers_web(spark, sf_dir):
         out,
         "%{IP:client} %{WORD:method} %{NOTSPACE:path} %{INT:status}",
         # default impl (arrow RE2 since round 5) — the oracle verifies
-        # the production path; jvm/pandas parity is pinned in tests
+        # the production path; arrow/jvm parity is pinned in tests
         parse_from="body_web", parse_to="a_grok",
     )
     out = parsers.uri_parser(out, parse_from="body_uri", parse_to="a_uri")

@@ -28,19 +28,16 @@ def test_fused_matches_join_variant(spark):
 
 
 def test_parse_impls_agree(spark):
-    """pandas-UDF, pyarrow-native (arrow_udf), and JVM-expression parse
-    produce identical attribute maps on all four payload formats."""
+    """pyarrow-native (arrow_udf) and JVM-expression parse produce
+    identical attribute maps on all four payload formats."""
     from opentelemetry_collector_contrib_spark.plans.pipeline import parse_records
 
     logs = datagen.raw_logs(spark, 500)
     a = parse_records(logs, impl="jvm").select("doc_id", "attributes")
-    b = parse_records(logs, impl="pandas").select("doc_id", "attributes")
-    c = parse_records(logs, impl="arrow").select("doc_id", "attributes")
+    b = parse_records(logs, impl="arrow").select("doc_id", "attributes")
     rows_a = {r["doc_id"]: r["attributes"] for r in a.collect()}
     rows_b = {r["doc_id"]: r["attributes"] for r in b.collect()}
-    rows_c = {r["doc_id"]: r["attributes"] for r in c.collect()}
     assert rows_a == rows_b
-    assert rows_b == rows_c
 
 
 def test_json_subset_arrow_matches_per_row_model():
@@ -209,7 +206,7 @@ def test_fused_plan_has_no_shuffle(spark, tmp_path):
 
 
 def test_all_impls_agree_on_edge_shapes(spark):
-    """All FOUR impls (jvm / pandas / arrow / hybrid) against the per-row
+    """All three impls (jvm / arrow / hybrid) against the per-row
     model on the cross-engine hazard shapes: unicode word chars in the kv
     auto-detect (python \\w is unicode, RE2/Java ASCII), trailing-newline
     bodies on the anchored formats (python/Java `$` is newline-lenient,
@@ -241,7 +238,7 @@ def test_all_impls_agree_on_edge_shapes(spark):
     ]
     df = spark.createDataFrame(rows, "body string, fmt int")
     model = [_parse_one(b, f) for b, f in rows]
-    for impl in ("jvm", "pandas", "arrow", "hybrid"):
+    for impl in ("jvm", "arrow", "hybrid"):
         out = parse_records(df, impl=impl).select("attributes").collect()
         got = [None if r[0] is None else dict(r[0]) for r in out]
         assert got == model, impl

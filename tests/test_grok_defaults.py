@@ -7,10 +7,10 @@ This checks:
      present in DEFAULT_PATTERNS (the optional vendor packs — firewalls,
      exim, mongodb, ... — remain out of scope; the base set is what the
      reference's own tests exercise);
-  2. every default pattern expands and compiles under all three engines
-     the library executes grok on: python `re` (pandas impl), RE2 via
-     pyarrow (arrow impl), and Java regex via the jvm impl's stripped
-     form;
+  2. every default pattern expands, compiles under python `re`, and runs
+     under both engines the library executes grok on: RE2 via pyarrow's
+     extract_regex (arrow impl; no default leaves it for the jvm
+     fallback) and Java regex via the jvm impl's stripped form;
   3. positive/negative match smoke vectors for the newly vendored names.
 """
 
@@ -24,7 +24,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.functions import grok as G
-from opentelemetry_collector_contrib_spark.functions.rxutil import strip_named_groups
+from opentelemetry_collector_contrib_spark.functions.rxutil import strip_named_groups, uncapture_unnamed_groups
 
 # The public elastic/go-grok base registry names (logstash grok-patterns
 # base collection). This list IS the parity assertion: a name the
@@ -66,10 +66,10 @@ def test_every_default_expands_and_compiles_python_and_re2():
         # G.expand() form is only valid for duplicate-free patterns)
         ex = G._Expander(None, named_captures_only=True)
         rx = ex.expand(f"%{{{name}}}")
-        re.compile(rx)  # python re (pandas impl)
-        # RE2 (arrow impl): pyarrow raises on RE2-invalid patterns;
-        # RE2 named groups use (?P<...>) like python — run a probe match
-        pc.match_substring_regex(pa.array(["probe"]), rx)
+        re.compile(rx)
+        # RE2 (arrow impl): extract_regex raises on RE2-invalid patterns
+        # and on unnamed groups, which grok_extract rewrites away first
+        pc.extract_regex(pa.array(["probe"]), pattern=uncapture_unnamed_groups(rx))
 
 
 def test_every_default_compiles_under_java(spark):
@@ -163,7 +163,7 @@ def test_grok_extract_new_patterns_jvm_pandas_agree(spark):
     ]
     df = spark.createDataFrame(rows, ["body"])
     pat = "%{SYSLOG5424BASE}"
-    for impl in ("jvm", "pandas", "arrow"):
+    for impl in ("jvm", "arrow"):
         out = [
             r[0]
             for r in df.select(grok_extract(F.col("body"), pat, impl=impl)).collect()
@@ -175,10 +175,9 @@ def test_grok_extract_new_patterns_jvm_pandas_agree(spark):
 
 def test_grok_arrow_impl_agreement_and_fallback(spark):
     """impl='arrow' (RE2 C++ pass, the reference's own engine family)
-    agrees with jvm and pandas on duplicate-key first-non-empty merge,
-    inline custom groups, NULL rows, and non-matching rows — and a
-    python-only inline construct (RE2 rejects lookahead) silently falls
-    back to the pandas engine at plan time."""
+    agrees with jvm on duplicate-key first-non-empty merge, inline custom
+    groups, NULL rows, and non-matching rows — and an inline construct
+    RE2 rejects (lookahead) falls back to the jvm engine at plan time."""
     from opentelemetry_collector_contrib_spark.functions.grok import grok_extract
 
     rows = [
@@ -191,17 +190,17 @@ def test_grok_arrow_impl_agreement_and_fallback(spark):
     custom = {"KV": r"(?:a=%{WORD:v})", "KV2": r"(?:b=%{WORD:v})"}
     pat = "%{KV} %{KV2}"
     per = {}
-    for impl in ("jvm", "pandas", "arrow"):
+    for impl in ("jvm", "arrow"):
         per[impl] = [
             dict(r[0]) if r[0] is not None else None
             for r in df.select(
                 grok_extract(F.col("body"), pat, custom=custom, impl=impl)
             ).collect()
         ]
-    assert per["jvm"] == per["pandas"] == per["arrow"]
+    assert per["jvm"] == per["arrow"]
     assert per["arrow"][0] == {"v": "1"} and per["arrow"][1] is None
 
-    # RE2-rejected pattern (lookahead) -> plan-time fallback to pandas
+    # RE2-rejected pattern (lookahead) -> plan-time fallback to jvm
     la = r"(?P<x>foo(?=bar))"
     df2 = spark.createDataFrame([("foobar",), ("foobaz",)], ["body"])
     got = [

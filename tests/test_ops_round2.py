@@ -5,6 +5,7 @@ framing."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -440,11 +441,17 @@ def test_non_transparent_deframe(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_vectorized_parse_matches_scalar_reference(spark):
-    """parse_multiformat's group-wise vectorized dispatch must agree with
-    the per-row _parse_one reference on every format x edge case."""
-    import pandas as pd
+def _arrow_parse(bodies, fmts):
+    """One Arrow batch through the arrow parse engine -> list of dicts."""
+    from opentelemetry_collector_contrib_spark.functions.vparse import _parse_multiformat_arrow_batch
 
+    got = _parse_multiformat_arrow_batch(pa.array(bodies, type=pa.string()), pa.array(fmts, type=pa.int32()))
+    return [None if m is None else dict(m) for m in got.to_pylist()]
+
+
+def test_vectorized_parse_matches_scalar_reference(spark):
+    """The arrow engine's vectorized format dispatch must agree with the
+    per-row _parse_one reference on every format x edge case."""
     from opentelemetry_collector_contrib_spark.functions import vparse
 
     bodies = [
@@ -461,13 +468,7 @@ def test_vectorized_parse_matches_scalar_reference(spark):
     ]
     fmts = [1, 1, 2, 0, 0, 3, 2, None, None, None]
     expected = [vparse._parse_one(b, f) for b, f in zip(bodies, fmts)]
-    got = list(
-        vparse.parse_multiformat.func(
-            pd.Series(bodies, dtype=object),
-            pd.to_numeric(pd.Series(fmts), errors="coerce"),
-        )
-    )
-    assert got == expected
+    assert _arrow_parse(bodies, fmts) == expected
 
 
 def test_minhash_xxhash_production_path_parity(spark, sf_dir):
@@ -597,18 +598,21 @@ GROK_VECTORS = [
 ]
 
 
-@pytest.mark.parametrize("impl", ["pandas", "jvm"])
+@pytest.mark.parametrize("impl", ["arrow", "jvm"])
 def test_grok_reference_vectors(spark, impl):
     from opentelemetry_collector_contrib_spark.functions import grok as G
 
     for target, pattern, nco, defs, expected in GROK_VECTORS:
         custom = G.parse_definitions(defs)
         df = spark.createDataFrame([(target,)], "body string")
-        got = df.select(
+        out = df.select(
             G.grok_extract(
                 F.col("body"), pattern, custom, impl=impl, named_captures_only=nco
             ).alias("m")
-        ).first()["m"]
+        )
+        plan = out._jdf.queryExecution().analyzed().toString()
+        assert ("_extract_arrow(" in plan) == (impl == "arrow"), (impl, pattern)
+        got = out.first()["m"]
         for k, v in expected.items():
             assert got.get(k) == v, f"{impl} {pattern} key {k}: {got.get(k)!r} != {v!r}"
 
@@ -618,12 +622,11 @@ def test_extract_patterns_paren_in_char_class(spark):
     from opentelemetry_collector_contrib_spark.functions.ottl import extract_patterns
 
     df = spark.createDataFrame([("x(a) code=42",)], "body string")
-    got = df.select(
-        extract_patterns(
-            F.col("body"), r"[()x]+\((?P<inner>\w)\) code=(?P<code>\d+)"
-        ).alias("m")
-    ).first()["m"]
-    assert got == {"inner": "a", "code": "42"}
+    for cls in ("[()x]", "[]()x]", "[^]()]"):  # a leading ']' is a member
+        got = df.select(
+            extract_patterns(F.col("body"), cls + r"+\((?P<inner>\w)\) code=(?P<code>\d+)").alias("m")
+        ).first()["m"]
+        assert got == {"inner": "a", "code": "42"}, cls
 
 
 # ---------------------------------------------------------------------------
@@ -712,7 +715,7 @@ def test_grok_inline_named_groups_mixed_with_refs(spark):
     from opentelemetry_collector_contrib_spark.functions import grok as G
 
     df = spark.createDataFrame([("level=warn 42",), ("nope",)], "body string")
-    for impl in ("pandas", "jvm"):
+    for impl in ("arrow", "jvm"):
         rows = df.select(
             G.grok_extract(
                 F.col("body"), r"level=(?P<level>\w+) %{INT:code}", impl=impl
@@ -871,8 +874,6 @@ def test_fuzz_vectorized_parse_parity(spark):
     import json
     import random
 
-    import pandas as pd
-
     from opentelemetry_collector_contrib_spark.functions import vparse
 
     rng = random.Random(3)
@@ -899,7 +900,4 @@ def test_fuzz_vectorized_parse_parity(spark):
             ]))
         fmts.append(fmt)
     expected = [vparse._parse_one(b, f) for b, f in zip(bodies, fmts)]
-    got = list(vparse.parse_multiformat.func(
-        pd.Series(bodies, dtype=object), pd.to_numeric(pd.Series(fmts), errors="coerce")
-    ))
-    assert got == expected
+    assert _arrow_parse(bodies, fmts) == expected

@@ -23,7 +23,7 @@ def test_regex_parser_named_groups(spark):
 def test_grok_parser_apache_both_impls(spark):
     line = '10.0.0.7 - frank [10/Oct/2025:13:55:36 +0000] "GET /api/v1/items HTTP/1.1" 200 2326'
     df = _one(spark, line)
-    for impl in ("pandas", "jvm", "arrow"):
+    for impl in ("jvm", "arrow"):
         attrs = parsers.grok_parser(df, "%{COMMONAPACHELOG}", impl=impl).select("attributes").first()[0]
         assert attrs["source_address"] == "10.0.0.7"
         assert attrs["user_name"] == "frank"
@@ -268,9 +268,9 @@ def test_windows_event_parser(spark):
 
 
 def test_grok_impls_agree_on_non_ascii(spark):
-    """Java regex and go-grok's RE2 treat \\w as ASCII; the pandas impl
-    compiles with re.ASCII so %{WORD} rejects 'émile' in BOTH impls
-    instead of matching only python-side."""
+    """Java regex (the jvm impl) and RE2 (the arrow impl, go-grok's own
+    engine family) both treat \\w as ASCII, so %{WORD} rejects 'émile'
+    in BOTH impls."""
     from opentelemetry_collector_contrib_spark.functions.grok import grok_extract
 
     df = spark.createDataFrame(
@@ -283,6 +283,6 @@ def test_grok_impls_agree_on_non_ascii(spark):
     ]
     b = [
         None if r[0] is None else dict(r[0])
-        for r in df.select(grok_extract(F.col("body"), pat, impl="pandas")).collect()
+        for r in df.select(grok_extract(F.col("body"), pat, impl="arrow")).collect()
     ]
     assert a == b == [None, {"user": "bob", "id": "7"}, None]

@@ -212,12 +212,12 @@ def _grok_arrow(df):
     return parsers.grok_parser(df, "%{COMMONAPACHELOG}"), "http_response_status_code", "_extract_arrow("
 
 
-def _grok_pandas(df):
+def _grok_re2_rejected(df):
     from opentelemetry_collector_contrib_spark.operators import parsers
 
-    # RE2 rejects the lookahead, so grok falls back to its pandas engine
+    # RE2 rejects the lookahead, so grok runs it on its jvm engine: no UDF
     pat = r'"(?:%{WORD:method}) (?=/)%{NOTSPACE:path}[^"]*" %{INT:status}'
-    return parsers.grok_parser(df, pat), "status", "_extract("
+    return parsers.grok_parser(df, pat), "status", None
 
 
 def _vparse(impl):
@@ -231,8 +231,8 @@ def _vparse(impl):
 
 @pytest.mark.parametrize(
     "parse",
-    [_grok_arrow, _grok_pandas, _vparse("arrow"), _vparse("hybrid")],
-    ids=["grok-arrow", "grok-pandas", "vparse-arrow", "vparse-hybrid"],
+    [_grok_arrow, _grok_re2_rejected, _vparse("arrow"), _vparse("hybrid")],
+    ids=["grok-arrow", "grok-re2-rejected", "vparse-arrow", "vparse-hybrid"],
 )
 def test_parse_udf_runs_once_under_a_filter(spark, parse):
     """A filter on a parsed key must not re-run the parse: Catalyst pushes
@@ -244,6 +244,6 @@ def test_parse_udf_runs_once_under_a_filter(spark, parse):
     parsed, key, udf_name = parse(df)
     kept = processors.filter_processor(parsed, [F.element_at("attributes", key) == "404"])
     plan = _plan(kept)
-    assert udf_name in plan
-    assert plan.count("EvalPython") == 1, plan
+    assert udf_name is None or udf_name in plan
+    assert plan.count("EvalPython") == (udf_name is not None), plan
     assert kept.count() == 3  # the 404 line dropped, the unparsed line kept

@@ -104,8 +104,8 @@ def test_assign_keys_short_list_pads_null(spark):
 
 
 def test_parse_records_pandas_without_fmt_column(spark):
-    """Arrow null-int -> NaN broke auto-detect: every payload fell through
-    to CONTAINERD_RX and returned {} (vparse.py fmt normalization)."""
+    """Without a fmt column every payload auto-detects: the arrow engine
+    receives the missing fmt as Arrow nulls, not as containerd tags."""
     from opentelemetry_collector_contrib_spark.plans.pipeline import parse_records
 
     df = spark.createDataFrame(
@@ -116,7 +116,7 @@ def test_parse_records_pandas_without_fmt_column(spark):
         ],
         "body string",
     )
-    out = parse_records(df, impl="pandas")
+    out = parse_records(df, impl="arrow")
     got = [r["attributes"] for r in out.collect()]
     assert got[0]["a"] == "1" and got[0]["ok"] == "true"
     assert got[1] == {"k": "v", "x": "2"}
@@ -809,7 +809,7 @@ def test_convert_sum_to_gauge_drops_sum_metadata(spark):
 
 
 def test_parse_records_jvm_pandas_parity_on_malformed_rows(spark):
-    """The jvm and pandas parse impls must agree on MALFORMED and
+    """The jvm and arrow parse impls must agree on MALFORMED and
     NULL-fmt rows, not just happy paths: invalid/non-object JSON -> NULL
     map, '='-less kv pairs keep the key with a NULL value, regex
     no-match -> NULL, NULL fmt auto-detects in both."""
@@ -828,15 +828,11 @@ def test_parse_records_jvm_pandas_parity_on_malformed_rows(spark):
         (10, None, 1),
     ]
     df = spark.createDataFrame(rows, "doc_id long, body string, fmt int")
-    jvm = {
-        r["doc_id"]: r["attributes"]
-        for r in parse_records(df, impl="jvm").collect()
-    }
-    pnd = {
-        r["doc_id"]: r["attributes"]
-        for r in parse_records(df, impl="pandas").collect()
-    }
-    assert jvm == pnd
+    def attrs(impl):
+        return {r["doc_id"]: r["attributes"] for r in parse_records(df, impl=impl).collect()}
+
+    jvm = attrs("jvm")
+    assert jvm == attrs("arrow")
     assert jvm[1] == {"a": "1", "n": None}
     assert jvm[2] is None and jvm[3] is None and jvm[4] is None
     assert jvm[5] == {"k": "v", "plain": None}
@@ -1325,17 +1321,18 @@ def test_parse_int_overflow_magnitude_is_null_not_abort(spark):
     assert base0[0] is None and base0[3] == 16
 
 
-def test_resolve_parse_impl_adaptive_and_pinned(spark, monkeypatch):
-    from opentelemetry_collector_contrib_spark.plans.pipeline import resolve_parse_impl
+def test_unknown_parse_impl_raises(spark):
+    """A removed engine name fails at plan time, never runs another one."""
+    import pytest as _pytest
 
-    monkeypatch.delenv("SPARK_GRAFT_PARSE_IMPL", raising=False)
-    # conftest session is low-parallelism -> hybrid below the 8-slot knee
-    expect = "hybrid" if spark.sparkContext.defaultParallelism <= 8 else "arrow"
-    assert resolve_parse_impl(spark) == expect
-    monkeypatch.setenv("SPARK_GRAFT_PARSE_IMPL", "jvm")
-    assert resolve_parse_impl(spark) == "jvm"
-    monkeypatch.setenv("SPARK_GRAFT_PARSE_IMPL", "auto")
-    assert resolve_parse_impl(spark) == expect
+    from opentelemetry_collector_contrib_spark.functions.grok import grok_extract
+    from opentelemetry_collector_contrib_spark.plans.pipeline import parse_records
+
+    removed = "pandas"
+    with _pytest.raises(ValueError, match="parse impl"):
+        parse_records(spark.createDataFrame([("k=v",)], "body string"), impl=removed)
+    with _pytest.raises(ValueError, match="grok impl"):
+        grok_extract(F.col("body"), "%{WORD:w}", impl=removed)
 
 
 def test_csv_parser_quoted_fields_go_semantics(spark):
@@ -1379,8 +1376,8 @@ def test_severity_parser_http_range_aliases(spark):
 
 def test_time_parser_location_parse_in_location(spark):
     """time.go's `location`: a zone-less layout's wall clock is read in
-    the given IANA zone (Go ParseInLocation) — DST-aware — and a bogus
-    zone fails at PLAN time like the reference's config error."""
+    the given IANA zone (Go ParseInLocation) — DST-aware — an epoch is not
+    shifted, and a bogus zone fails at PLAN time like a config error."""
     import pytest as _pytest
 
     df = spark.createDataFrame(
@@ -1392,6 +1389,11 @@ def test_time_parser_location_parse_in_location(spark):
     assert got == {"2025-01-15 12:00:00": 17, "2025-07-15 12:00:00": 16}
     with _pytest.raises(ValueError, match="failed to load location"):
         parsers.time_parser(df, "t", "%Y-%m-%d %H:%M:%S", location="Not/AZone")
+    ep = spark.createDataFrame([("1736942400",)], "t string")  # 12:00 UTC
+    out = parsers.time_parser(ep, "t", "s", layout_type="epoch", location="America/New_York")
+    assert out.first()["timestamp"].hour == 12
+    with _pytest.raises(ValueError, match="failed to load location"):
+        parsers.time_parser(ep, "t", "s", layout_type="epoch", location="Not/AZone")
 
 
 def test_severity_parser_presets(spark):

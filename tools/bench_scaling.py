@@ -53,13 +53,9 @@ def _cmd(cpus: int, rows: int, files_slice: str = "", cpuset: bool = False) -> l
 # 16g, NOT bigger: at local[32] a 24g heap triples ParallelGC's CPU burn
 # (38 -> 115 JVM-CPU-s for the same 4M-row run — larger young gen x 32 GC
 # threads), which poisons the high-parallelism level's throughput.
-# Parse impl pinned to `arrow` (not the cores-adaptive default): the
-# N->4N efficiency pair must compare ONE binary at two parallelism
-# levels, not hybrid-at-8 vs arrow-at-32.
 _ENV = {
     **os.environ,
     "SPARK_GRAFT_DRIVER_MEM": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-    "SPARK_GRAFT_PARSE_IMPL": os.environ.get("SPARK_GRAFT_PARSE_IMPL", "arrow"),
 }
 
 
