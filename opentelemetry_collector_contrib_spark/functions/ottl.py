@@ -151,9 +151,11 @@ def parse_csv_(col: Column, header: list[str], delimiter: str = ",") -> Column:
     the delimiter, '""' unescapes to '"'), and a line with a stray or
     unterminated quote is a parse FAILURE (NULL map -> on_error), like
     encoding/csv's per-record error. Lines without a quote char take the
-    plain-split fast path — one branch, all JVM. Short rows pad with
-    NULL via try_element_at (a plain slice would feed map_from_arrays
-    unequal arrays and ABORT THE JOB on the first short row)."""
+    plain-split fast path — one branch, all JVM. A line whose field count
+    differs from the header's is a failure too (NULL map), like
+    MapCSVHeaders' "wrong number of fields". A header name that repeats
+    keeps its LAST field (the Go map overwrite), resolved at plan time:
+    map_from_arrays would abort the job on the duplicate key."""
     d = re.escape(delimiter)
     simple = F.split(col, d)
     if len(delimiter) == 1 and delimiter != '"':
@@ -174,12 +176,11 @@ def parse_csv_(col: Column, header: list[str], delimiter: str = ",") -> Column:
         parts = F.when(~col.contains('"'), simple).otherwise(F.when(valid, unq))
     else:  # multi-char delimiters have no encoding/csv analog: split only
         parts = simple
-    vals = F.array(
-        *[F.try_element_at(parts, F.lit(i + 1)) for i in range(len(header))]
-    )
+    last = {h: i for i, h in enumerate(header)}
+    vals = F.array(*[F.try_element_at(parts, F.lit(i + 1)) for i in last.values()])
     return F.when(
-        parts.isNotNull(),
-        F.map_from_arrays(F.array(*[F.lit(h) for h in header]), vals),
+        F.size(parts) == len(header),
+        F.map_from_arrays(F.array(*[F.lit(h) for h in last]), vals),
     )
 
 

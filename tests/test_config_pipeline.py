@@ -166,7 +166,12 @@ def test_full_collector_config_end_to_end(spark, tmp_path):
     """receivers -> processors -> exporters -> service.pipelines: the
     reference's actual YAML layout compiled and run, multi-exporter
     fan-out + obsreport counts."""
+    import glob
+    import json
     import os
+    import pathlib
+
+    import pyarrow.parquet as pq
 
     from opentelemetry_collector_contrib_spark.plans.config import compile_collector_config
 
@@ -194,6 +199,24 @@ def test_full_collector_config_end_to_end(spark, tmp_path):
         for d in (back, as_json)
     ]
     assert sums[0] == sums[1]
+    # the parquet exporter writes the sink encoding (zstd, v2 pages with
+    # delta encodings, no dictionary); the json exporter still writes
+    # plain uncompressed JSON lines
+    files = sorted(glob.glob(f"{out}/logs/__exporter=clickhouse/*.parquet"))
+    chunks = [
+        meta.row_group(g).column(c)
+        for meta in (pq.ParquetFile(f).metadata for f in files)
+        for g in range(meta.num_row_groups)
+        for c in range(meta.num_columns)
+    ]
+    assert chunks and {c.compression for c in chunks} == {"ZSTD"}
+    assert not any(c.has_dictionary_page for c in chunks)
+    body = [c for c in chunks if c.path_in_schema == "body"]
+    assert body and all("DELTA_BYTE_ARRAY" in c.encodings for c in body)
+    parts = glob.glob(f"{out}/logs/__exporter=file%2Fbackup/part-*")
+    assert parts and all(p.endswith(".json") for p in parts)
+    lines = [json.loads(ln) for p in parts for ln in pathlib.Path(p).read_text().splitlines()]
+    assert len(lines) == 90 and all("body" in x for x in lines)
 
 
 def _cache_is_empty(spark) -> bool:

@@ -901,14 +901,33 @@ def test_grok_sentinel_reserved_in_custom_definitions(spark):
         grok.expand("%{FOO:key}", custom={"FOO": r"(?P<grok0>x)"})
 
 
-def test_csv_parser_short_row_pads_null(spark):
-    df = spark.createDataFrame([("a,b",), ("x,y,z",)], "body string")
+def test_csv_parser_field_count_mismatch_null_map(spark):
+    df = spark.createDataFrame([("a,b",), ("x,y,z",), ("p,q,r,s",)], "body string")
     out = parsers.csv_parser(df, header=["c1", "c2", "c3"])
     got = {r["body"]: r["attributes"] for r in out.collect()}
-    # a short row pads with NULL instead of aborting the job on
-    # map_from_arrays' equal-length requirement
-    assert got["a,b"] == {"c1": "a", "c2": "b", "c3": None}
+    # a short or long row fails the entry (MapCSVHeaders: "wrong number of
+    # fields") instead of padding with NULL or dropping the extra fields
+    assert got["a,b"] is None
+    assert got["p,q,r,s"] is None
     assert got["x,y,z"] == {"c1": "x", "c2": "y", "c3": "z"}
+
+
+def test_csv_repeated_header_last_wins(spark):
+    """A repeated header name keeps its last field (the Go map overwrite)
+    instead of aborting the job with DUPLICATED_MAP_KEY."""
+    from opentelemetry_collector_contrib_spark.functions.ottl_parser import apply_statements
+
+    df = spark.createDataFrame([("1,2,3",), ('"4",5,"6"',)], "body string")
+    got = {
+        r["body"]: r["attributes"]
+        for r in parsers.csv_parser(df, header=["k", "v", "k"]).collect()
+    }
+    assert got == {"1,2,3": {"k": "3", "v": "2"}, '"4",5,"6"': {"k": "6", "v": "5"}}
+    out = apply_statements(
+        df.withColumn("attributes", F.create_map().cast("map<string,string>")),
+        ['set(attributes["k"], ParseCSV(body, ["k", "v", "k"])["k"])'],
+    )
+    assert sorted(r["attributes"]["k"] for r in out.collect()) == ["3", "6"]
 
 
 def test_syslog_repeated_structured_data_keys_last_wins(spark):
@@ -1347,10 +1366,10 @@ def test_csv_parser_quoted_fields_go_semantics(spark):
         ('a"b,c,d', None),          # bare quote in unquoted field -> Go error
         ('"unterminated,b,c', None),
         ('"",2,3', {"f1": "", "f2": "2", "f3": "3"}),
-        ("x,y", {"f1": "x", "f2": "y", "f3": None}),  # short row pads
+        ("x,y", None),  # short row: wrong number of fields
         # quoted lines whose first field is empty (a zero-width match at
         # the start used to swallow the next field)
-        (',"a"', {"f1": "", "f2": "a", "f3": None}),
+        (',"a",', {"f1": "", "f2": "a", "f3": ""}),
         (',x,"y"', {"f1": "", "f2": "x", "f3": "y"}),
     ]
     df = spark.createDataFrame([(b,) for b, _ in rows], "body string")
