@@ -50,15 +50,10 @@ SEVERITY_NUMBER = {
     "fatal": 21, "fatal2": 22, "fatal3": 23, "fatal4": 24,
 }
 SEVERITY_ALIASES = {
-    # common aliases accepted by the stanza severity parser
-    "warning": "warn",
-    "err": "error",
-    "critical": "fatal",
-    "crit": "fatal",
-    "emerg": "fatal4",
-    "notice": "info2",
-    "information": "info",
-    "informational": "info",
+    # what the 'default' preset adds to the otel table
+    # (severity_builder.go getBuiltinMapping)
+    "warning": "warn", "warning2": "warn2", "warning3": "warn3", "warning4": "warn4",
+    "err": "error", "err2": "error2", "err3": "error3", "err4": "error4",
 }
 # canonical text emitted for a given number (upper-case level names, as in
 # plog.SeverityNumber String()).

@@ -353,18 +353,19 @@ def severity_parser(
     text (case-insensitive, aliases) -> severity number + canonical text.
     Implemented as a literal CASE chain (small closed domain -> no join).
 
-    preset (severity_builder.go:18-22,116): 'default' = the standard
-    name+alias table; 'none' = only the user mapping; 'otel'/'aliases' =
-    the 24 OTel level names plus their stringified numbers ('1'..'24')."""
+    preset (severity_builder.go:18-22,116): 'none' = only the user
+    mapping; 'otel'/'aliases' = the 24 OTel level names plus their
+    stringified numbers ('1'..'24'); 'default' = that table plus
+    warning/warning2-4 and err/err2-4."""
     if preset == "none":
         table: dict[str, int] = {}
-    elif preset in ("otel", "aliases"):
+    elif preset in ("otel", "aliases", "default"):
         table = dict(SEVERITY_NUMBER)
+        if preset == "default":
+            table.update({a: SEVERITY_NUMBER[t] for a, t in SEVERITY_ALIASES.items()})
+        # numeric keys last: element_at on a literal map scans its keys in
+        # order, and level names are what log lines carry
         table.update({str(v): v for v in SEVERITY_NUMBER.values()})
-    elif preset == "default":
-        table = dict(SEVERITY_NUMBER)
-        for alias, target in SEVERITY_ALIASES.items():
-            table[alias] = SEVERITY_NUMBER[target]
     else:
         raise ValueError(f"unknown severity preset {preset!r}")
     if mapping:

@@ -282,18 +282,6 @@ def interval_processor(
     )
 
 
-def metricstransform_aggregate(
-    df: DataFrame,
-    keep_labels: list[str],
-    value_col: str = "value",
-    aggregation: str = "sum",
-) -> DataFrame:
-    """metricstransformprocessor aggregate_labels (config.go:160-211):
-    collapse label sets keeping only `keep_labels`, combining values."""
-    aggs = {"sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max, "count": F.count}
-    return df.groupBy(*keep_labels).agg(aggs[aggregation](value_col).alias(value_col))
-
-
 _MT_AGGS = {"sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max, "count": F.count}
 
 
@@ -715,27 +703,6 @@ def probabilistic_sampler(
         )
         return out.filter((~never) & (t_out.cast("double") <= r.cast("double")))
     raise ValueError(f"unknown sampler mode {mode!r} (hash_seed|equalizing|proportional)")
-
-
-def tail_sampling(
-    df: DataFrame,
-    trace_col: str = "trace_id",
-    policies: list[tuple[str, Column]] | None = None,
-) -> DataFrame:
-    """tailsamplingprocessor (internal/sampling/*): decide per TRACE from
-    aggregates over its spans, then keep whole traces. Policies are
-    (name, boolean aggregate Column) pairs, e.g.
-    (F.max('duration_ns') > 5e9) for the latency policy or
-    (F.count('*') >= 10) for span_count. ORed (any policy samples).
-
-    One shuffle (groupBy trace) + a broadcast-friendly semi-join back."""
-    if not policies:
-        raise ValueError("need at least one policy")
-    agg = None
-    for _, cond in policies:
-        agg = cond if agg is None else (agg | cond)
-    keep = df.groupBy(trace_col).agg(agg.alias("__sampled")).filter(F.col("__sampled"))
-    return df.join(keep.select(trace_col), trace_col, "left_semi")
 
 
 # ---------------------------------------------------------------------------

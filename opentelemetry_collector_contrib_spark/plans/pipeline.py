@@ -144,6 +144,35 @@ def parse_records(logs: DataFrame, impl: str = DEFAULT_PARSE_IMPL) -> DataFrame:
     return records
 
 
+# first-match routes of both log pipelines (routingconnector README's
+# tenant example): severity >= ERROR first, then one route per tenant
+DEFAULT_ROUTES = ["errors", "acme", "ecorp"]
+
+
+def _enrich_route(
+    records: DataFrame, meta: DataFrame, routes: list[tuple[str, F.Column]] | None
+) -> dict[str, DataFrame]:
+    """The shared tail of the log pipelines: broadcast enrichment (source ->
+    service/namespace/region/tenant), the resource map, first-match
+    routing and per-sink counts. Calls `lookup_enrich` and
+    `connectors.routing_connector` through their module attributes, so a
+    wrapper installed on either sees every pipeline."""
+    enriched = lookup_enrich(records, meta, "source")
+    enriched = enriched.withColumn(
+        "resource_attributes",
+        F.map_from_arrays(
+            F.array(F.lit("service.name"), F.lit("k8s.namespace.name"), F.lit("cloud.region")),
+            F.array(F.col("service_name"), F.col("namespace"), F.col("region")),
+        ),
+    )
+    if not routes:
+        errors, *tenants = DEFAULT_ROUTES
+        routes = [(errors, F.col("severity_number") >= 17)]
+        routes += [(t, F.col("tenant") == t) for t in tenants]
+    routed = connectors.routing_connector(enriched, routes)
+    return {"routed": routed, "counts": sink_counts(routed)}
+
+
 def log_pipeline(
     sequences: DataFrame,
     logs: DataFrame,
@@ -160,27 +189,7 @@ def log_pipeline(
     records = parse_records(logs)
     # join payloads with their token sequences (doc_id is the row identity)
     joined = records.join(sequences.select("doc_id", "tokens", "n_tok"), "doc_id")
-    # broadcast enrichment: source -> service/namespace/region/tenant
-    enriched = lookup_enrich(joined, meta, "source")
-    enriched = enriched.withColumn(
-        "resource_attributes",
-        F.map_from_arrays(
-            F.array(F.lit("service.name"), F.lit("k8s.namespace.name"), F.lit("cloud.region")),
-            F.array(F.col("service_name"), F.col("namespace"), F.col("region")),
-        ),
-    )
-    # first-match routing (routingconnector README's tenant example)
-    routes = routes or [
-        ("errors", F.col("severity_number") >= 17),
-        ("acme", F.col("tenant") == "acme"),
-        ("ecorp", F.col("tenant") == "ecorp"),
-    ]
-    routed = connectors.routing_connector(enriched, routes)
-    counts = sink_counts(routed)
-    return {"routed": routed, "counts": counts}
-
-
-DEFAULT_ROUTES = ["errors", "acme", "ecorp"]
+    return _enrich_route(joined, meta, routes)
 
 
 def log_pipeline_fused(
@@ -208,21 +217,7 @@ def log_pipeline_fused(
     records = parse_records(fused, impl=parse_impl)
     if not keep_payload:
         records = records.drop("body", "fmt", "ingest_ts")
-    enriched = lookup_enrich(records, meta, "source")
-    enriched = enriched.withColumn(
-        "resource_attributes",
-        F.map_from_arrays(
-            F.array(F.lit("service.name"), F.lit("k8s.namespace.name"), F.lit("cloud.region")),
-            F.array(F.col("service_name"), F.col("namespace"), F.col("region")),
-        ),
-    )
-    routes = routes or [
-        ("errors", F.col("severity_number") >= 17),
-        ("acme", F.col("tenant") == "acme"),
-        ("ecorp", F.col("tenant") == "ecorp"),
-    ]
-    routed = connectors.routing_connector(enriched, routes)
-    return {"routed": routed, "counts": sink_counts(routed)}
+    return _enrich_route(records, meta, routes)
 
 
 def events_as_log_records(spark: SparkSession, sf_dir: str) -> DataFrame:

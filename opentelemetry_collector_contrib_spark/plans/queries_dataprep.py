@@ -1,5 +1,5 @@
-"""Training-data-prep query registry: dedup / similarity / text-analysis /
-multimodal operators over the `documents` and `embeddings` tables, each
+"""Training-data-prep query registry: dedup / similarity / clustering /
+split operators over the `documents` and `embeddings` tables, each
 with a DuckDB oracle that mirrors the exact arithmetic (same hash — md5
 first-8-hex — same double-precision evaluation order, same rounding).
 
@@ -13,11 +13,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..dataprep import dedup, multimodal, similarity, textstats
-
-
-def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from ..dataprep import dedup, similarity
+from .queries_suites import _documents, _events
 
 
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -469,126 +466,8 @@ SELECT vec_id, rank, neighbor_id, ROUND(cos, 4) AS cos FROM ranked WHERE rank <=
 
 
 # ---------------------------------------------------------------------------
-# text analysis
+# near-dup clusters, dataset split, collector transform chains
 # ---------------------------------------------------------------------------
-
-_STOPLIST_SQL = "[" + ", ".join(f"'{w}'" for w in textstats.EN_STOPWORDS) + "]"
-
-
-def q_text_language_id(spark, sf_dir):
-    docs = _documents(spark, sf_dir)
-    return docs.select(
-        "doc_id",
-        textstats.language_id(F.col("text")).alias("lang_guess"),
-        dedup.q4(textstats.english_ratio(F.col("text"))).alias("en_ratio"),
-    )
-
-
-SQL_TEXT_LANGUAGE_ID = f"""
-WITH r AS (
-  SELECT doc_id,
-         list_sum(list_transform(string_split(text,' '),
-           w -> CASE WHEN list_contains({_STOPLIST_SQL}, w) THEN 1 ELSE 0 END))::DOUBLE
-         / len(string_split(text,' '))::DOUBLE AS ratio
-  FROM documents
-)
-SELECT doc_id, CASE WHEN ratio >= 0.02 THEN 'en' ELSE 'und' END AS lang_guess,
-       FLOOR(ratio * 10000 + 0.5)/10000 AS en_ratio
-FROM r
-"""
-
-
-def q_text_quality(spark, sf_dir):
-    docs = _documents(spark, sf_dir)
-    return docs.select(
-        "doc_id", textstats.quality_score(F.col("text")).alias("quality")
-    )
-
-
-SQL_TEXT_QUALITY = f"""
-WITH b AS (
-  SELECT doc_id, string_split(text,' ') AS w FROM documents
-), m AS (
-  SELECT doc_id, len(w)::DOUBLE AS n,
-         len(list_distinct(w))::DOUBLE AS nd,
-         list_sum(list_transform(w,
-           x -> CASE WHEN list_contains({_STOPLIST_SQL}, x) THEN 1 ELSE 0 END))::DOUBLE AS hits
-  FROM b
-)
-SELECT doc_id,
-       FLOOR((0.4 * least(n / 100.0, 1.0) + 0.3 * (nd / n)
-             + 0.3 * least((hits / n) / 0.1, 1.0)) * 10000 + 0.5)/10000 AS quality
-FROM m
-"""
-
-
-def q_text_token_count(spark, sf_dir):
-    docs = _documents(spark, sf_dir)
-    ws_count, bpe_count = textstats.token_counts(F.col("text"))
-    return docs.select(
-        "doc_id", ws_count.alias("ws_tokens"), bpe_count.cast("long").alias("bpe_tokens")
-    )
-
-
-SQL_TEXT_TOKEN_COUNT = r"""
-SELECT doc_id, len(string_split(text,' ')) AS ws_tokens,
-       len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS bpe_tokens
-FROM documents
-"""
-
-
-def q_text_fingerprint(spark, sf_dir):
-    docs = _documents(spark, sf_dir)
-    return docs.select(
-        "doc_id", textstats.fingerprint(F.col("text")).alias("fp")
-    )
-
-
-SQL_TEXT_FINGERPRINT = """
-SELECT doc_id,
-       list_reduce(list_transform(string_split(text,' '),
-                     w -> ('0x'||substr(md5(w),1,8))::BIGINT),
-                   (a, b) -> (a * 31 + b) % 2147483647) AS fp
-FROM documents
-"""
-
-
-# ---------------------------------------------------------------------------
-# multimodal
-# ---------------------------------------------------------------------------
-
-
-def q_multimodal_metadata(spark, sf_dir):
-    media = multimodal.attach_payload(_documents(spark, sf_dir))
-    return media.select(
-        "doc_id",
-        F.col("media_meta.mime").alias("mime"),
-        F.col("media_meta.n_bytes").alias("n_bytes"),
-        F.md5("payload").alias("digest"),
-    )
-
-
-SQL_MULTIMODAL_METADATA = """
-SELECT doc_id, 'application/octet-stream' AS mime,
-       octet_length(encode(text)) AS n_bytes, md5(text) AS digest
-FROM documents
-"""
-
-
-def q_multimodal_decode(spark, sf_dir):
-    media = multimodal.attach_payload(_documents(spark, sf_dir))
-    decoded = multimodal.decode_image(media, fake=True)
-    return decoded.select("doc_id", "width", "height", "n_bytes")
-
-
-SQL_MULTIMODAL_DECODE = """
-SELECT doc_id,
-       ascii(substr(text, 1, 1)) + 1 AS width,
-       CASE WHEN octet_length(encode(text)) > 1 THEN ascii(substr(text, 2, 1)) + 1
-            ELSE 1 END AS height,
-       octet_length(encode(text)) AS n_bytes
-FROM documents
-"""
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -1090,7 +969,7 @@ def q_logstransform_chain(spark, sf_dir):
     (/root/reference/processor/logstransformprocessor/)."""
     from ..operators import parsers
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
+    ev = _events(spark, sf_dir).withColumn(
         "body",
         F.format_string(
             "%s [%s] uid=%d msg=event",
@@ -1126,7 +1005,7 @@ def q_attributes_extract_convert(spark, sf_dir):
     (/root/reference/internal/coreinternal/attraction/attraction.go:176-300)."""
     from ..operators.processors import AttrAction, attributes_processor
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
+    ev = _events(spark, sf_dir).withColumn(
         "attributes",
         F.create_map(
             F.lit("raw"),
@@ -1154,9 +1033,8 @@ FROM events
 """
 
 
-# text_* and multimodal_* queries are folded into text_stats_suite /
-# multimodal_suite (queries_suites.py) to fit the driver's 50-query cap;
-# their single-operator fns above remain for tests.
+# the text_* and multimodal_* operators have their oracle rows in
+# text_stats_suite / multimodal_suite (queries_suites.py)
 REGISTRY_DATAPREP: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
     "dedup_clusters": (q_dedup_clusters, SQL_DEDUP_CLUSTERS),
     "dataset_split": (q_dataset_split, SQL_DATASET_SPLIT),

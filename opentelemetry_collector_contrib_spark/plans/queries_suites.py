@@ -38,7 +38,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import ottl, xmlfuncs
@@ -57,6 +57,8 @@ def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _us(col) -> F.Column:
+    """epoch microseconds of a timestamp column (parquet loads TIMESTAMP_NTZ;
+    session TZ is UTC so the cast is identity)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.unix_micros(c.cast("timestamp"))
 
@@ -218,7 +220,7 @@ def q_parsers_syslog_time(spark, sf_dir):
     out = parsers.time_parser(out, "ts_str", "%Y-%m-%d %H:%M:%S", "strptime", out_col="t1")
     out = parsers.time_parser(out, "ts_ms", "ms", "epoch", out_col="t2")
     out = parsers.trace_parser(out, trace_id_from="tid", span_id_from="sid", flags_from="fl")
-    out = parsers.severity_parser(out, "lvl")
+    out = parsers.severity_parser(out, "lvl", mapping={"notice": 10})
     out = parsers.scope_name_parser(out, "a5[appname]")
 
     # --- RFC6587 tcp framing round-trips (pkg/stanza/operator/input/tcp):
@@ -1845,7 +1847,7 @@ def q_streaming_windowed_counts(spark, sf_dir):
 
     # events.parquet is a single file; the file stream source needs a
     # directory, so stream the parent dir with a glob filter
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events(spark, sf_dir).schema
     src = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -1864,7 +1866,7 @@ def q_streaming_windowed_counts(spark, sf_dir):
 
     # --- groupbytrace over the same events + a watermark-driving sentinel
     gbt_dir = tempfile.mkdtemp(prefix="gbt_stream_src_")
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    events = _events(spark, sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
     events.coalesce(1).write.mode("overwrite").parquet(gbt_dir)

@@ -148,13 +148,17 @@ def test_time_parser_strptime_and_epoch(spark):
 
 
 def test_severity_parser_aliases_and_canonical_text(spark):
-    df = spark.createDataFrame([{"lvl": v} for v in ["warning", "ERROR", "Info", "crit", "nonsense"]])
+    df = spark.createDataFrame(
+        [{"lvl": v} for v in ["warning", "ERROR", "Info", "Err3", "crit", "nonsense"]]
+    )
     out = parsers.severity_parser(df, "lvl").orderBy("lvl").collect()
     got = {r["lvl"]: (r["severity_number"], r["severity_text"]) for r in out}
     assert got["warning"] == (13, "WARN")
     assert got["ERROR"] == (17, "ERROR")
     assert got["Info"] == (9, "INFO")
-    assert got["crit"] == (21, "FATAL")
+    assert got["Err3"] == (19, "ERROR3")
+    # not in the reference's default mapping
+    assert got["crit"] == (0, "")
     assert got["nonsense"] == (0, "")
 
 

@@ -1417,10 +1417,11 @@ def test_time_parser_location_parse_in_location(spark):
 
 def test_severity_parser_presets(spark):
     """severity_builder.go presets: 'none' = user mapping only, 'otel' =
-    the 24 level names + stringified numbers, 'default' as before."""
+    the 24 level names + stringified numbers, 'default' = otel plus
+    warning/warning2-4 and err/err2-4."""
     df = spark.createDataFrame([("error",), ("17",), ("warning",)], "s string")
     default = {r["s"]: r["severity_number"] for r in parsers.severity_parser(df, "s").collect()}
-    assert default["error"] == 17 and default["warning"] == 13 and default["17"] == 0
+    assert default["error"] == 17 and default["warning"] == 13 and default["17"] == 17
     otel = {r["s"]: r["severity_number"] for r in parsers.severity_parser(
         df, "s", preset="otel").collect()}
     assert otel["error"] == 17 and otel["17"] == 17 and otel["warning"] == 0

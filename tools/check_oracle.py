@@ -3,9 +3,15 @@ on Spark and its oracle_sql() on DuckDB, compare row count, sorted column
 names, and an order-insensitive value hash.
 
 Usage: python tools/check_oracle.py [name ...]
-Env:   ORACLE_SF_DIR  parquet dir (default /root/testdata/sf0.01)
-       ORACLE_CORES   spark local[N] + shuffle partitions (default 8)
-       ORACLE_JSON    write a CORRECTNESS-style JSON report here
+Env:   ORACLE_SF_DIR       parquet dir (default /root/testdata/sf0.01)
+       ORACLE_CORES        spark local[N] + shuffle partitions (default:
+                           the cores this process may run on)
+       ORACLE_DUCK_MEM     DuckDB max_memory (default: 40% of physical RAM,
+                           next to the Spark driver heap; sized for ONE
+                           process, so set it when running several at once)
+       ORACLE_DUCK_THREADS DuckDB threads (default: DuckDB's own)
+       ORACLE_EXCLUDE      comma-separated query names to skip
+       ORACLE_JSON         write a CORRECTNESS-style JSON report here
 """
 
 from __future__ import annotations
@@ -95,9 +101,10 @@ def main():
 
     only = set(sys.argv[1:])
     exclude = set(filter(None, os.environ.get("ORACLE_EXCLUDE", "").split(",")))
-    cores = int(os.environ.get("ORACLE_CORES", "8"))
+    cores = int(os.environ.get("ORACLE_CORES") or len(os.sched_getaffinity(0)))
     spark = build_session(app_name="oracle-check", master=f"local[{cores}]", shuffle_partitions=cores)
-    duck_mem = os.environ.get("ORACLE_DUCK_MEM", "20GB")
+    phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    duck_mem = os.environ.get("ORACLE_DUCK_MEM") or f"{int(phys_mb * 0.4)}MB"
 
     def fresh_con(n_threads=None):
         # Bound DuckDB's memory and give it a spill dir: its default limit

@@ -16,7 +16,10 @@ if [ "$(cat /proc/sys/vm/max_map_count)" -lt 1048576 ]; then
     || echo "WARN: could not raise vm.max_map_count; big mirrors may bad_alloc" >&2
 fi
 SUB=$REPO/testdata_sf10/subset
+# five shards run at once, so each gets a fixed DuckDB budget rather than
+# check_oracle's one-process default (40% of RAM each would overcommit)
 export ORACLE_CORES=8 ORACLE_DUCK_THREADS=8 SPARK_DRIVER_MEMORY=14g
+export ORACLE_DUCK_MEM=${ORACLE_DUCK_MEM:-20GB}
 
 S1="parsers_syslog_time dedup_clusters dedup_exact dedup_minhash_lsh"
 S2="ann_sign_lsh ottl_xml_suite tailsampling_policies metricstransform_full"
