@@ -204,7 +204,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    cache: bool = True,
     hash_impl: str = "md5",
 ) -> DataFrame:
     """Near-duplicate pairs: MinHash+LSH candidate generation, exact
@@ -217,9 +216,9 @@ def minhash_lsh_pairs(
        frame only — shingle arrays never enter the band shuffle, which
        keeps shuffle bytes ~ O(rows x bands x 24B) instead of carrying
        every shingle array `bands` times;
-    3. surviving candidate pairs (tiny vs the corpus) re-join the cached
-       shingle frame for exact verification — AQE broadcasts the
-       candidate side, so the verify join is map-side.
+    3. surviving candidate pairs (tiny vs the corpus) re-join the
+       checkpointed shingle frame for exact verification — AQE
+       broadcasts the candidate side, so the verify join is map-side.
 
     hash_impl: 'md5' (default) is bit-reproducible in DuckDB — the
     correctness-oracle path; 'xxhash' is the production path (same plan,
@@ -231,26 +230,25 @@ def minhash_lsh_pairs(
             "otherwise trailing signature elements are silently unused"
         )
     rows = num_hashes // bands
+    # reused by the signature pass AND the verify re-join — without the
+    # checkpoint both would recompute the shingle transform
     base = docs.select(
         F.col(id_col).alias("id"),
         word_shingles(F.col(text_col), shingle_k).alias("sh"),
-    )
-    if cache:
-        # reused by the signature pass AND the verify re-join — without
-        # persist both would recompute the shingle transform
-        base = base.persist()
+    ).localCheckpoint()
     sigs = base.withColumn(
         "sig", minhash_signature(F.col("sh"), num_hashes, hash_impl)
     )
-    banded = sigs.select(
-        "id", F.explode(lsh_bands(F.col("sig"), bands, rows, hash_impl)).alias("b")
-    ).select("id", F.col("b.band").alias("band"), F.col("b.band_hash").alias("bh"))
-    if cache:
-        # the self-join would otherwise recompute the full signature
-        # (num_hashes x shingles hashes) on BOTH sides — the signature
-        # pass dominates cost at any scale, so materialize the slim
-        # banded frame once (memory-and-disk; evictable)
-        banded = banded.persist()
+    # the self-join would otherwise recompute the full signature
+    # (num_hashes x shingles hashes) on BOTH sides — the signature pass
+    # dominates cost at any scale, so materialize the slim banded frame once
+    banded = (
+        sigs.select(
+            "id", F.explode(lsh_bands(F.col("sig"), bands, rows, hash_impl)).alias("b")
+        )
+        .select("id", F.col("b.band").alias("band"), F.col("b.band_hash").alias("bh"))
+        .localCheckpoint()
+    )
     a = banded.alias("a")
     b = banded.alias("b")
     cand = (
@@ -417,10 +415,12 @@ def duplicate_clusters(
     """
     edges = pairs.select(
         F.col(id_a).alias("a"), F.col(id_b).alias("b")
-    ).unionByName(pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b"))).persist()
+    ).unionByName(
+        pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b"))
+    ).localCheckpoint()
     labels = edges.select(F.col("a").alias("id")).distinct().withColumn(
         "cluster", F.col("id")
-    ).persist()
+    ).localCheckpoint()
     changed = 0
     for _ in range(max_iter):
         neighbor_min = (
@@ -428,14 +428,9 @@ def duplicate_clusters(
             .groupBy("a")
             .agg(F.min("cluster").alias("nmin"))
         )
-        # eager localCheckpoint, not persist: the pointer-jumping
-        # self-join below puts TWO copies of `stepped` in the round's
-        # plan, so with persist (which caches data but never truncates
-        # the LOGICAL plan) the analyzed plan would DOUBLE every round —
-        # exponential, and the driver OOMs on plan analysis around round
-        # 10. Checkpointing flattens each round to a leaf so the
-        # per-round plan stays constant-size. (At executor-loss-sensitive
-        # deployments swap in checkpoint() with a checkpoint dir.)
+        # the pointer-jumping self-join below puts TWO copies of
+        # `stepped` in the round's plan; checkpointing flattens each
+        # round to a leaf, so the plan does not double every round
         stepped = (
             labels.join(neighbor_min, labels["id"] == neighbor_min["a"], "left")
             .select(
@@ -467,11 +462,9 @@ def duplicate_clusters(
             .filter(F.col("n.cluster") != F.col("o.cluster"))
             .count()
         )
-        labels.unpersist()
         labels = new_labels
         if changed == 0:
             break
-    edges.unpersist()
     if changed != 0:
         # exiting via max_iter means labels are NOT the component minimum
         # (a duplicate chain longer than max_iter hops) — failing loudly

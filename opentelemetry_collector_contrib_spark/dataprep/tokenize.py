@@ -203,48 +203,38 @@ def train_bpe_distributed(
     use train_bpe unless the distinct table genuinely cannot be collected.
     Ties broken lexicographically so training is partitioning-independent.
     Stops early when no pair clears min_freq."""
-    wf = (
+    cur = (
         word_frequencies(df, text_col)
         .select("freq", _chars(F.col("word")).alias("toks"))
-        .persist()
+        .localCheckpoint()
     )
     merges: list[tuple[str, str]] = []
-    cur = wf
-    try:
-        for _ in range(num_merges):
-            pairs = cur.select(
-                "freq",
-                F.explode(
-                    F.zip_with(
-                        F.col("toks"),
-                        F.slice(F.col("toks"), 2, F.greatest(F.size("toks") - 1, F.lit(1))),
-                        lambda x, y: F.struct(x.alias("a"), y.alias("b")),
-                    )
-                ).alias("p"),
-            ).filter(F.col("p.b").isNotNull())
-            best = (
-                pairs.groupBy("p")
-                .agg(F.sum("freq").alias("n"))
-                .orderBy(F.col("n").desc(), F.col("p.a").asc(), F.col("p.b").asc())
-                .first()
-            )
-            if best is None or best["n"] < min_freq:
-                break
-            a, b = best["p"]["a"], best["p"]["b"]
-            merges.append((a, b))
-            # eager localCheckpoint, not persist: it materializes the new
-            # round AND truncates lineage, so the logical plan stays O(1)
-            # per round — a persist() chain keeps the full merge-UDF plan
-            # tree, whose per-round AQE explainString grows without bound
-            # and OOMs the driver past ~20 rounds (same pattern as
-            # dedup.py's pointer-jumping loop)
-            nxt = cur.withColumn(
-                "toks", _merge_pair_udf(a, b)(F.col("toks"))
-            ).localCheckpoint()
-            cur.unpersist()
-            cur = nxt
-    finally:
-        cur.unpersist()
+    for _ in range(num_merges):
+        pairs = cur.select(
+            "freq",
+            F.explode(
+                F.zip_with(
+                    F.col("toks"),
+                    F.slice(F.col("toks"), 2, F.greatest(F.size("toks") - 1, F.lit(1))),
+                    lambda x, y: F.struct(x.alias("a"), y.alias("b")),
+                )
+            ).alias("p"),
+        ).filter(F.col("p.b").isNotNull())
+        best = (
+            pairs.groupBy("p")
+            .agg(F.sum("freq").alias("n"))
+            .orderBy(F.col("n").desc(), F.col("p.a").asc(), F.col("p.b").asc())
+            .first()
+        )
+        if best is None or best["n"] < min_freq:
+            break
+        a, b = best["p"]["a"], best["p"]["b"]
+        merges.append((a, b))
+        # checkpoint each round: it materializes the new round AND
+        # truncates lineage, so the logical plan stays O(1) per round — a
+        # chain of merge-UDF projections would grow the per-round AQE
+        # explainString without bound and OOM the driver past ~20 rounds
+        cur = cur.withColumn("toks", _merge_pair_udf(a, b)(F.col("toks"))).localCheckpoint()
     return merges
 
 

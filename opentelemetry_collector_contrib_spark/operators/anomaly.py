@@ -249,11 +249,12 @@ def isolation_forest_processor(
         forest = fit_isolation_forest(
             df, feature_cols, num_trees=num_trees, sample_size=sample_size, seed=seed
         )
+    # checkpointed: the threshold action below would otherwise run the
+    # Python tree-walk twice, once for the percentile and again when the
+    # caller consumes the returned frame
     scored = df.withColumn(
         score_col, isolation_forest_scores(forest, *[F.col(c) for c in feature_cols])
-    ).persist()  # the threshold action below would otherwise run the
-    # Python tree-walk twice: once for the percentile, again when the
-    # caller consumes the returned frame
+    ).localCheckpoint()
     thr = scored.selectExpr(
         f"percentile({score_col}, {threshold_quantile}) AS t"
     ).first()["t"]

@@ -127,7 +127,7 @@ def coralogix_transactions(
     # a boundary starts a new transaction for its children
     spans = spans.withColumn(
         "bnd", F.col("is_root") | F.col("pre") | F.col("knd").isin("server", "consumer")
-    ).persist()
+    ).localCheckpoint()
 
     # --- initial ptr state: one hop to the parent ---------------------
     # segment covered by a state row = the nodes strictly above s up to
@@ -152,15 +152,12 @@ def coralogix_transactions(
             .otherwise(F.lit(_PENDING))
             .alias("stat"),
         )
-        .persist()
+        .localCheckpoint()
     )
 
     # --- pointer doubling ---------------------------------------------
-    # each round's pending count is a FULL count over the (persisted)
-    # child state, which materializes every partition of the cache before
-    # the parent is unpersisted — unpersisting the parent while the child
-    # is still lazy would force each round to recompute the whole join
-    # cascade from st0 (O(rounds^2) joins instead of O(rounds))
+    # each round joins `state` to itself, so each round is checkpointed:
+    # the plan stays one leaf instead of doubling every round
     state = st0
     pending = state.filter(F.col("stat") == _PENDING).count()
     for _ in range(max_rounds):
@@ -194,10 +191,9 @@ def coralogix_transactions(
                 .otherwise(F.col("bstat"))
                 .alias("stat"),
             )
-            .persist()
+            .localCheckpoint()
         )
         pending = new_state.filter(F.col("stat") == _PENDING).count()
-        state.unpersist()
         state = new_state
     # rows still _PENDING after max_rounds sit on a parent cycle ->
     # unreachable, same treatment as _DEAD (untouched)
@@ -230,7 +226,7 @@ def coralogix_transactions(
         .otherwise(pre_root)
     )
 
-    out = (
+    return (
         df.join(
             res,
             (F.col(trace_col) == F.col("__ct")) & (F.col(span_col) == F.col("__cs")),
@@ -240,20 +236,3 @@ def coralogix_transactions(
         .withColumn(TRANSACTION_ROOT_ATTR, is_root_out)
         .drop("__ct", "__cs", "__croot", "__cpre", "__cknd", "__cnm", "__cfb", "__cstat")
     )
-    # spans/state stay persisted: the returned DataFrame is lazy and its
-    # plan reads both — unpersisting here would recompute the whole
-    # doubling cascade on the caller's first action. Both frames are slim
-    # (ids + one name per span); Spark evicts them LRU when memory needs
-    # the space. Callers that materialize the result and keep the session
-    # alive should release them via release_transactions(out).
-    out._coralogix_persisted = [spans, state]
-    return out
-
-
-def release_transactions(result: "DataFrame") -> None:
-    """Unpersist the slim cached frames a coralogix_transactions result
-    still references. Call AFTER materializing (write/collect) the
-    result; before that, unpersisting would force the pointer-doubling
-    cascade to recompute from scratch on first action."""
-    for cached in getattr(result, "_coralogix_persisted", []):
-        cached.unpersist()

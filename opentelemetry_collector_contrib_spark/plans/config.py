@@ -33,12 +33,14 @@ Example (YAML or dict):
 from __future__ import annotations
 
 from collections.abc import Callable
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.ottl_parser import apply_statements, parse_condition
 from ..operators import parsers, processors, transformers
+from ..session import cached
 
 
 def _stage(cfg: dict) -> Callable[[DataFrame], DataFrame]:
@@ -391,14 +393,11 @@ def compile_collector_config(config: dict | str):
                 }
                 # one write per distinct format (partitionBy can't mix formats)
                 fmts = sorted(set(fmt_of.values()))
-                # several write jobs: persist the processed frame so they
-                # share one receiver -> processors pass (persist, write,
-                # write, unpersist — the foreachBatch multi-sink idiom)
-                cached = len(fmts) > 1
-                if cached:
-                    df.persist()
+                # several write jobs: cache the processed frame so they
+                # share one receiver -> processors pass (the foreachBatch
+                # multi-sink idiom)
                 counts: dict[str, int] = {}
-                try:
+                with cached(df) if len(fmts) > 1 else nullcontext():
                     for fmt in fmts:
                         sel = [e for e in real if fmt_of[e] == fmt]
                         part = tagged.filter(F.col("__exporter").isin(sel))
@@ -412,9 +411,6 @@ def compile_collector_config(config: dict | str):
                         if "default" not in sel:
                             got.pop("default", None)
                         counts.update(got)
-                finally:
-                    if cached:
-                        df.unpersist()
                 results[pname] = counts
             return results
 

@@ -9,11 +9,13 @@ REGISTRY_DATAPREP maps name -> (query_fn, oracle_sql | None).
 from __future__ import annotations
 
 from collections.abc import Callable
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..dataprep import dedup, similarity
+from ..session import cached
 from .queries_suites import _documents, _events
 
 
@@ -580,16 +582,6 @@ def q_dataset_split(spark, sf_dir):
         num_shards=4,
         minhash_kw={"hash_impl": "md5"},
     )
-    # curate_corpus returns LAZY stage frames (the caller decides what to
-    # materialize — its documented contract); this query aggregates SIX of
-    # them, so without persistence each stage row would recompute its full
-    # prefix chain (6x the dedup->filter->ppl->split->tokenize work — the
-    # exact re-evaluation the oracle side needed AS MATERIALIZED for).
-    # The persisted frames are row-per-doc and bounded by the input table;
-    # they are released lazily by LRU / session teardown (gate processes
-    # are short-lived; long-lived callers should unpersist themselves).
-    for key in ("deduped", "filtered", "selected", "assigned", "tokens"):
-        stages[key] = stages[key].persist()
 
     def srow(frame, label, cks):
         return frame.agg(
@@ -625,14 +617,25 @@ def q_dataset_split(spark, sf_dir):
             F.col("tokens"), F.lit(0).cast("long"), lambda a, t: a + t
         )
     )
-    curate_rows = (
-        srow(stages["deduped"], "deduped", F.sum("doc_id"))
-        .unionByName(srow(stages["filtered"], "filtered", F.sum("doc_id")))
-        .unionByName(srow(stages["selected"], "selected", F.sum("doc_id")))
-        .unionByName(assigned_rows)
-        .unionByName(srow(stages["tokens"], "tokens", F.sum("n_removed")))
-        .unionByName(srow(stages["packed"], "packed", token_sum))
-    )
+    # curate_corpus returns LAZY stage frames (the caller decides what to
+    # materialize — its documented contract). Only this function reads
+    # them, so they are cached while the few per-stage rows are computed:
+    # each stage then runs once on top of the cached stage before it,
+    # instead of every row re-running the dedup->filter->ppl->split->
+    # tokenize chain (the re-evaluation the oracle side needed AS
+    # MATERIALIZED for). The rows escape, so they are checkpointed.
+    with ExitStack() as stack:
+        for key in ("deduped", "filtered", "selected", "assigned", "tokens"):
+            stack.enter_context(cached(stages[key]))
+        curate_rows = (
+            srow(stages["deduped"], "deduped", F.sum("doc_id"))
+            .unionByName(srow(stages["filtered"], "filtered", F.sum("doc_id")))
+            .unionByName(srow(stages["selected"], "selected", F.sum("doc_id")))
+            .unionByName(assigned_rows)
+            .unionByName(srow(stages["tokens"], "tokens", F.sum("n_removed")))
+            .unionByName(srow(stages["packed"], "packed", token_sum))
+            .localCheckpoint()
+        )
     return base.unionByName(curate_rows)
 
 

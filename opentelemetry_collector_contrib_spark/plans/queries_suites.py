@@ -542,13 +542,13 @@ def q_text_stats_suite(spark, sf_dir):
 
     B = 256
     corpus = docs.select("doc_id", "lang", "text")
-    # hash/explode the corpus ONCE; the persisted (doc_id, lang, bucket)
+    # hash/explode the corpus ONCE; the checkpointed (doc_id, lang, bucket)
     # table feeds the target counts, the raw counts, and the scorer
     # (without it the gram explode runs 3x, and dsir_select's topk
     # self-join doubles the whole weights pipeline on top)
     db = corpus.select(
         "doc_id", "lang", F.explode(dsir.gram_buckets(F.col("text"), B)).alias("bucket")
-    ).persist()
+    ).localCheckpoint()
     ratios = dsir.dsir_log_ratio_table(
         spark,
         db.filter(F.col("lang") == "en").groupBy("bucket").agg(F.count(F.lit(1)).alias("cnt")),
@@ -559,7 +559,7 @@ def q_text_stats_suite(spark, sf_dir):
         corpus.select("doc_id")
         .join(dsir.dsir_weights_from_exploded(db, ratios), "doc_id", "left")
         .select("doc_id", F.coalesce(F.col("logw"), F.lit(0.0)).alias("logw"))
-        .persist()
+        .localCheckpoint()
     )
     sel = dsir.dsir_select(wts, k=100).select(
         "doc_id",
@@ -575,7 +575,7 @@ def q_text_stats_suite(spark, sf_dir):
 
     CB = 64
     lm, ctx = ccnet.bigram_lm(corpus.filter(F.col("lang") == "en"), buckets=CB)
-    scored = ccnet.score_logppl(corpus, lm, ctx, buckets=CB).persist()
+    scored = ccnet.score_logppl(corpus, lm, ctx, buckets=CB).localCheckpoint()
     cbuck = ccnet.ppl_bucket_hist(scored).select(
         "doc_id",
         F.col("logppl").alias("ccnet_logppl"),
@@ -1619,9 +1619,9 @@ def q_sequence_packing(spark, sf_dir):
         packing.pack_sequences(docs, max_len=64, num_shards=4)
         .withColumn("pid", F.col("shard") * F.lit(1_000_000) + F.col("seq_index"))
         # the packed frame feeds three subtrees (span explode, the
-        # all-docs left side, and the output join); without a persist the
-        # tokenize+pack shuffle would run three times
-        .persist()
+        # all-docs left side, and the output join); without the
+        # checkpoint the tokenize+pack shuffle would run three times
+        .localCheckpoint()
     )
     dup = packing.token_span_duplication(packed, span_len=16, id_col="pid")
     # ExactSubstr REMOVAL (Lee et al. 2022): cut every duplicated

@@ -14,8 +14,10 @@ Scale notes (100 TB / 1000-executor design):
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def build_session(
@@ -52,3 +54,28 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def cached(df: DataFrame) -> Iterator[DataFrame]:
+    """Persist `df` for the body of the `with` block; unpersist it on exit.
+
+    The package's one cache rule: a frame whose consumers all run inside
+    one function is cached with this block, so no exit path leaves it in
+    the CacheManager. A frame that escapes (returned lazily, or carried
+    from one loop round to the next) is `localCheckpoint()`ed instead:
+    that truncates its plan, never enters the CacheManager, and the
+    ContextCleaner frees its blocks once the last frame reading it is
+    garbage-collected. A persisted frame keeps its whole plan (a
+    self-join per round doubles it) and stays cached until unpersisted.
+
+    Trade-off: a local checkpoint has no lineage, so losing an executor
+    that holds its blocks fails the job. On a cluster where that matters,
+    use `checkpoint()` with a checkpoint dir on reliable storage
+    (`spark.sparkContext.setCheckpointDir`).
+    """
+    df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from ..session import cached
+
 
 def stream_pipeline(
     stream_df: DataFrame,
@@ -235,14 +237,11 @@ def stateful_delta_to_cumulative(
         if max_streams is not None:
             # two-phase exact top-K (threshold + boundary ranking) — not
             # a global row_number, which single-partition-sorts the whole
-            # state table every micro-batch; persist first because the
-            # cap runs count/quantile actions over the candidate state
-            nxt = nxt.persist()
-            try:
+            # state table every micro-batch; cached because the cap runs
+            # count/quantile actions over the candidate state
+            with cached(nxt):
                 capped = cap_tracked_streams(nxt, stream_cols, max_streams)
                 capped.write.mode("overwrite").parquet(f"{state_path}/v={batch_id}")
-            finally:
-                nxt.unpersist()
         else:
             nxt.write.mode("overwrite").parquet(f"{state_path}/v={batch_id}")
         # retention: one predecessor version is enough for replay

@@ -239,8 +239,6 @@ def _spy_writes(monkeypatch, spark, fail_on_call: int | None = None) -> list[boo
         return real(*args, **kwargs)
 
     monkeypatch.setattr(fanout, "write_fanout_with_counts", spy)
-    # other tests' frames may still be cached in the shared session
-    spark.catalog.clearCache()
     return cached
 
 

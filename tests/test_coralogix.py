@@ -187,19 +187,41 @@ def test_duplicate_span_ids_do_not_fan_out(spark):
         assert by_name[nm]["cgx_transaction"] == "root-op", nm
 
 
-def test_release_transactions_unpersists_cached_frames(spark):
-    from opentelemetry_collector_contrib_spark.operators.coralogix import (
-        release_transactions,
-    )
-
-    df = spark.createDataFrame(
-        [("t1", "a", None, "root-op", "internal", 100),
-         ("t1", "b", "a", "child", "internal", 200)],
-        SCHEMA,
-    )
-    out = coralogix_transactions(df)
-    out.count()
-    cached = list(getattr(out, "_coralogix_persisted"))
-    assert cached and all(c.storageLevel.useMemory for c in cached)
-    release_transactions(out)
-    assert all(not c.storageLevel.useMemory for c in cached)
+def test_deep_chain_plan_stays_flat_and_leaves_nothing_cached(spark):
+    """A linear chain with a server span halfway down: every pointer-
+    doubling round joins the state to itself, so without truncating the
+    lineage each round doubles the plan (a 128-span chain then takes
+    minutes). The 64-span plan must stay close to the 8-span
+    one, and the result must leave nothing in the CacheManager."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    empty_before = cache_manager.isEmpty()
+    plan_chars = {}
+    for depth in (8, 64):
+        mid = depth // 2
+        rows = [
+            (
+                "t1",
+                f"s{i}",
+                f"s{i - 1}" if i else None,
+                f"op{i}",
+                "server" if i == mid else "internal",
+                100 + i,
+            )
+            for i in range(depth)
+        ]
+        out = coralogix_transactions(spark.createDataFrame(rows, SCHEMA))
+        plan_chars[depth] = len(out._jdf.queryExecution().analyzed().toString())
+        got = {
+            r["span_id"]: (r["cgx_transaction"], r["cgx_transaction_root"])
+            for r in out.collect()
+        }
+        want = {
+            f"s{i}": (
+                "op0" if i < mid else f"op{mid}",
+                True if i in (0, mid) else None,
+            )
+            for i in range(depth)
+        }
+        assert got == want, depth
+    assert plan_chars[64] < 1.5 * plan_chars[8], plan_chars
+    assert cache_manager.isEmpty() == empty_before

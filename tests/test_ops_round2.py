@@ -502,7 +502,7 @@ def test_minhash_band_shuffle_is_slim(spark, sf_dir):
     from opentelemetry_collector_contrib_spark.dataprep import dedup
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    plan = dedup.minhash_lsh_pairs(docs, cache=False)._jdf.queryExecution().toString()
+    plan = dedup.minhash_lsh_pairs(docs)._jdf.queryExecution().toString()
     import re as _re
 
     for m in _re.finditer(r"Exchange hashpartitioning\(([^)]*)\)", plan):

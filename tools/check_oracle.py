@@ -12,6 +12,10 @@ Env:   ORACLE_SF_DIR       parquet dir (default /root/testdata/sf0.01)
        ORACLE_DUCK_THREADS DuckDB threads (default: DuckDB's own)
        ORACLE_EXCLUDE      comma-separated query names to skip
        ORACLE_JSON         write a CORRECTNESS-style JSON report here
+
+After the last query the report records `cache_manager_empty`: whether the
+session's CacheManager is empty, i.e. no query left a persisted frame
+behind. The run exits non-zero when it is not.
 """
 
 from __future__ import annotations
@@ -241,12 +245,15 @@ def main():
                 for x in list(d - s)[:3]:
                     print(f"     duck-only:  {x[:160]}")
         del slines, dlines
+    cache_empty = bool(spark._jsparkSession.sharedState().cacheManager().isEmpty())
+    report["cache_manager_empty"] = cache_empty
     spark.stop()
     if out:
         flush()
         print(f"wrote {out}")
+    print(f"cache_manager_empty: {str(cache_empty).lower()}")
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
-    sys.exit(1 if failures else 0)
+    sys.exit(1 if failures or not cache_empty else 0)
 
 
 if __name__ == "__main__":
