@@ -1,7 +1,8 @@
 """Benchmark harness (driver contract).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+in a session from `session.build_session` (local[$SPARK_GRAFT_CPUS], else
+every core) and prints ONE JSON line:
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 The flagship is the north-rule tokenized-sequence pipeline
@@ -12,7 +13,7 @@ throughput here extrapolates to the 10^12-row target.
 
 Usage:
     python bench.py                    # driver mode: one JSON line
-    python bench.py --cpus 8           # scaling run at a different parallelism
+    python bench.py --cpus 2           # scaling run at a different parallelism
     python bench.py --seq-rows 2000000 # override pipeline input size
 """
 
@@ -22,12 +23,15 @@ import argparse
 import json
 import os
 import sys
+import tempfile
 import time
 
 from pyspark.sql import SparkSession
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
+
+from opentelemetry_collector_contrib_spark.session import build_session  # noqa: E402
 
 # Registry queries benchmarked alongside the flagship pipeline: one per
 # operator family that dominates cost at scale (shuffle-heavy aggregation,
@@ -48,70 +52,9 @@ HEADLINE = [
 ]
 
 
-def _task_slots(cpus: int) -> int:
-    """Task slots for an N-core budget: all N at <=8 cores; above that,
-    leave ~1/8 of the budget (>=4 cores) as headroom for the JVM's
-    non-task threads (GC, scan/codegen infra) and the Python workers'
-    scheduling spikes. Measured on the fused pipeline at a 32-core
-    cpuset: local[28] beats local[32] by ~15-25% wall (32 task threads +
-    32 Arrow workers + GC on 32 cores oversubscribes ~2.2x; dropping 4
-    slots converts thrash into throughput). The same tuning on a real
-    cluster is spark.executor.cores < node vcores — standard practice."""
-    if cpus <= 8:
-        return cpus
-    # headroom tapers with the budget (monotonic: 9->8, 16->14, 32->28,
-    # 64->56); a flat max(4,...) floor made a 9-core budget run FEWER
-    # slots than an 8-core one
-    return cpus - max(1, cpus // 8)
-
-
-def build_spark(cpus: int, tasks: int = 0) -> SparkSession:
-    tasks = tasks or int(os.environ.get("SPARK_GRAFT_TASKS", "0")) or _task_slots(cpus)
-    # ParallelGC thread cap: ergonomics gives 5/8 of visible cores (23 at
-    # 32), measured 10-20% of total JVM CPU on this allocation-heavy
-    # pipeline; 8 threads keeps pause work off the task cores without
-    # lengthening collections enough to matter on a 16g young gen
-    gc_threads = min(8, cpus)
-    return (
-        SparkSession.builder.master(f"local[{tasks}]")
-        .appName(f"otelcontrib-spark-bench-{cpus}")
-        .config("spark.sql.shuffle.partitions", str(max(tasks * 2, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # local-bench input splits: 32MB so a ~600MB scan still yields
-        # enough tasks to feed every core (at cluster scale the 128MB
-        # default is right; this is a bench-harness knob, not engine code)
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PART_BYTES", "33554432"),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000"),
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # ParallelGC: the pipeline churns humongous allocations (token
-        # arrays + Arrow transfer buffers); G1 handles those with erratic
-        # concurrent-cycle storms (measured 40-220 JVM-CPU-s variance for
-        # identical runs), ParallelGC stays flat (~25-35 CPU-s) and ~10%
-        # faster wall. Throughput-batch jobs don't need G1's pause goals.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_GRAFT_DRIVER_JAVA_OPTS",
-                f"-XX:+UseParallelGC -XX:ParallelGCThreads={gc_threads}",
-            ),
-        )
-        .getOrCreate()
-    )
-
-
-def _force(df) -> int:
+def _force(df) -> None:
     """Materialize a DataFrame fully (all partitions, all columns)."""
     df.write.format("noop").mode("overwrite").save()
-    return -1
 
 
 def _cpu_seconds() -> tuple[float, float]:
@@ -156,17 +99,13 @@ def _cpu_seconds() -> tuple[float, float]:
     return jvm, py
 
 
-def _jvm_cpu_seconds() -> float:
-    return sum(_cpu_seconds())
-
-
 def _input_tables(spark: SparkSession, n_rows: int) -> str:
     """Materialize the tokenized-sequence + raw-log input tables to parquet
     once (reused across runs and processes). The north-rule input is a
     TABLE scan, not on-the-fly generation — benching off disk keeps the
     timed plan small (generation DAGs cost ~10s of driver-serial codegen)
     and gives the scan real pushdown/pruning behavior."""
-    base = f"/tmp/spark_graft_bench_input_{n_rows}"
+    base = os.path.join(tempfile.gettempdir(), f"spark_graft_bench_input_{n_rows}")
     marker = os.path.join(base, "fused", "_SUCCESS")
     if not os.path.exists(marker):
         from opentelemetry_collector_contrib_spark import datagen
@@ -200,9 +139,6 @@ def bench_log_pipeline(
     used by the scaling harness because one box's disk bandwidth is a
     shared constant, while on a real N-executor cluster the sink write
     spreads across N disks/object-store streams."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
     from opentelemetry_collector_contrib_spark import datagen
     from opentelemetry_collector_contrib_spark.plans.pipeline import (
         DEFAULT_ROUTES,
@@ -213,21 +149,6 @@ def bench_log_pipeline(
     meta = datagen.source_meta(spark)
     base = _input_tables(spark, n_rows)
     out_dir = f"{base}_out"
-    routes = DEFAULT_ROUTES
-
-    # split the input scan so every core gets >=3 tasks (a 240MB input at
-    # the default 128MB split yields 2 tasks — starving any parallelism);
-    # runtime conf, so it adapts to the actual input size and core count
-    input_bytes = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _, fs in os.walk(f"{base}/fused")
-        for f in fs
-    )
-    cores = spark.sparkContext.defaultParallelism
-    split = int(os.environ.get("SPARK_GRAFT_SPLIT_BYTES", "0")) or max(
-        1 << 20, input_bytes // (3 * cores)
-    )
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
 
     warm = log_pipeline_fused(datagen.input_table(spark, 20_000), meta)
     _force(warm["routed"])
@@ -255,22 +176,13 @@ def bench_log_pipeline(
         # counts collected by the same job via Observation — no second scan
         jvm0, py0 = _cpu_seconds()
         t0 = time.perf_counter()
-        if sink == "parquet":
-            counts = write_fanout_with_counts(out["routed"], out_dir, routes)
-        else:
-            obs = Observation()
-            aggs = [
-                F.sum(F.when(F.col("route") == r, 1).otherwise(0)).alias(r)
-                for r in [*routes, "default"]
-            ]
-            _force(out["routed"].observe(obs, *aggs))
-            counts = obs.get
+        counts = write_fanout_with_counts(out["routed"], out_dir, DEFAULT_ROUTES, fmt=sink)
         wall = time.perf_counter() - t0
         if wall < best:
             jvm1, py1 = _cpu_seconds()
             best, best_cpu = wall, (jvm1 - jvm0, py1 - py0)
         if not files_slice:
-            assert sum(int(v or 0) for v in counts.values()) == n_rows
+            assert sum(counts.values()) == n_rows
     return best, best_cpu
 
 
@@ -282,7 +194,7 @@ def bench_filelog_ingest(spark: SparkSession, n_lines: int) -> tuple[float, floa
     throughput for the apples-to-apples comparison in BASELINE.md."""
     from pyspark.sql import functions as F
 
-    path = f"/tmp/spark_graft_bench_lines_{n_lines}"
+    path = os.path.join(tempfile.gettempdir(), f"spark_graft_bench_lines_{n_lines}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (
             spark.range(n_lines)
@@ -313,7 +225,10 @@ def bench_filelog_ingest(spark: SparkSession, n_lines: int) -> tuple[float, floa
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument(
+        "--cpus", type=int, default=0,
+        help="local task slots (0 = build_session's default: $SPARK_GRAFT_CPUS, else every core)",
+    )
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--seq-rows", type=int, default=0, help="pipeline input rows (0 = 10M*sf)")
     ap.add_argument("--skip-registry", action="store_true", help="only the tokens pipeline")
@@ -331,7 +246,12 @@ def main() -> None:
         sf = 0.1
     n_rows = args.seq_rows or max(int(10_000_000 * sf), 10_000)
 
-    spark = build_spark(args.cpus)
+    spark = build_session(
+        app_name="otelcontrib-spark-bench",
+        master=f"local[{args.cpus}]" if args.cpus else None,
+        shuffle_partitions=args.cpus,
+    )
+    cpus = spark.sparkContext.defaultParallelism
     try:
         queries: dict[str, float] = {}
 
@@ -348,8 +268,6 @@ def main() -> None:
             from opentelemetry_collector_contrib_spark.plans.queries import REGISTRY
 
             for name in HEADLINE:
-                if name not in REGISTRY:
-                    continue
                 fn, _sql = REGISTRY[name]
                 # min of two timed runs: the first also warms JIT/codegen,
                 # and the min discards co-tenant contention spikes (this
@@ -390,7 +308,7 @@ def main() -> None:
                     "unit": "sec",
                     "queries": queries,
                     "sf": sf,
-                    "cpus": args.cpus,
+                    "cpus": cpus,
                     "pipeline_rows": n_rows,
                     "pipeline_seq_per_sec": round(seq_per_sec, 1),
                     "pipeline_cpu_sec": round(sum(cpu), 2),

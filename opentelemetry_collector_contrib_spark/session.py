@@ -42,10 +42,7 @@ def build_session(
         # 4g (Spark default 1g): an oracle/driver collect of a 10M-row
         # result at sf10 serializes >1 GiB of task results; on a real
         # cluster results this size go through a distributed sink instead
-        .config(
-            "spark.driver.maxResultSize",
-            os.environ.get("SPARK_DRIVER_MAX_RESULT_SIZE", "4g"),
-        )
+        .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -59,11 +59,15 @@ _PARQUET_OPTIONS = {
 
 def _save(df: DataFrame, base_path: str, route_col: str, mode: str, fmt: str) -> None:
     """The one sink write: partitionBy(route) under dynamic partition
-    overwrite, with the module's encoding policy on parquet sinks."""
+    overwrite, with the module's encoding policy on parquet sinks. A `noop`
+    sink runs the same job and writes nothing; Spark rejects `noop` with
+    partitionBy, so it is saved unpartitioned."""
     writer = df.write.mode(mode).option("partitionOverwriteMode", "dynamic")
     if fmt == "parquet":
         writer = writer.options(**_PARQUET_OPTIONS)
-    writer.partitionBy(route_col).format(fmt).save(base_path)
+    if fmt != "noop":
+        writer = writer.partitionBy(route_col)
+    writer.format(fmt).save(base_path)
 
 
 def write_fanout(

@@ -90,7 +90,8 @@ def test_tap_processor_passthrough_and_bounded_sample(spark, tmp_path):
 def test_write_fanout_null_routes_counted_as_unlisted(spark, tmp_path):
     """NULL routes (a routing expression that itself yields NULL) must be
     counted in the '__unlisted' catch-all — ~NULL.isin(names) is NULL,
-    which when() treats as false, the original silent-undercount hole."""
+    which when() treats as false, the original silent-undercount hole.
+    A `noop` sink counts the same and writes nothing."""
     df = spark.range(10).select(
         F.col("id"),
         F.when(F.col("id") < 4, "a")
@@ -98,11 +99,11 @@ def test_write_fanout_null_routes_counted_as_unlisted(spark, tmp_path):
         .otherwise("rogue")
         .alias("route"),
     )
-    counts = write_fanout_with_counts(df, str(tmp_path / "sinks2"), ["a"])
-    assert counts["a"] == 4
-    assert counts["__unlisted"] == 6  # 3 NULL + 3 rogue
-    total_accounted = sum(v for k, v in counts.items())
-    assert total_accounted == 10
+    for fmt in ("parquet", "noop"):
+        out = tmp_path / fmt
+        counts = write_fanout_with_counts(df, str(out), ["a"], fmt=fmt)
+        assert counts == {"a": 4, "default": 0, "__unlisted": 6}, fmt  # 3 NULL + 3 rogue
+        assert out.exists() == (fmt != "noop")
 
 
 SINK_SCHEMA = "id long, route string, tokens array<int>, attrs map<string,string>, body string"

@@ -50,21 +50,12 @@ def _cmd(cpus: int, rows: int, files_slice: str = "", cpuset: bool = False) -> l
     return cmd
 
 
-# 16g, NOT bigger: at local[32] a 24g heap triples ParallelGC's CPU burn
-# (38 -> 115 JVM-CPU-s for the same 4M-row run — larger young gen x 32 GC
-# threads), which poisons the high-parallelism level's throughput.
-_ENV = {
-    **os.environ,
-    "SPARK_GRAFT_DRIVER_MEM": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-}
-
-
 def run_once(cpus: int, rows: int, cpuset: bool = False) -> dict:
     """One bench.py invocation in a fresh JVM (first SparkSession pins the
     master, so every level needs its own process)."""
     out = subprocess.run(
         _cmd(cpus, rows, cpuset=cpuset),
-        capture_output=True, text=True, env=_ENV, check=True, cwd=REPO,
+        capture_output=True, text=True, check=True, cwd=REPO,
     )
     line = out.stdout.strip().splitlines()[-1]
     return json.loads(line)
@@ -90,7 +81,7 @@ def run_executors(k: int, cpus_each: int, rows: int, cpuset: bool = False) -> di
     procs = [
         subprocess.Popen(
             cmd(i),
-            stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True, env=_ENV, cwd=REPO,
+            stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True, cwd=REPO,
         )
         for i in range(k)
     ]
@@ -133,7 +124,7 @@ def main() -> None:
     if args.mode.startswith("executors"):
         # make sure the input exists with enough part files for slicing
         subprocess.run(
-            _cmd(args.cpus_each, args.rows), capture_output=True, env=_ENV, cwd=REPO, check=True
+            _cmd(args.cpus_each, args.rows), capture_output=True, cwd=REPO, check=True
         )
 
     best: dict[int, float] = {lv: float("inf") for lv in levels}
